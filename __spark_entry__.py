@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from youtube_podcast_data_pipeline_azure_spark.enrichment import (
@@ -847,6 +847,16 @@ def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_mining.ngram_diversity(_t(spark, sf_dir, "documents"))
 
 
+def _knn_split(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``(corpus, queries)`` over embeddings: the vec_id < 5 rows are
+    the ``(query_id, embedding)`` queries, the rest the corpus."""
+    emb = _t(spark, sf_dir, "embeddings")
+    queries = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    return emb.where(F.col("vec_id") >= 5), queries
+
+
 def q_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN index persistence roundtrip: train + write the IVF index
     (centroid table + inverted lists partitioned by centroid_id), load
@@ -856,11 +866,7 @@ def q_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument, now certifying the persistence machinery too)."""
     import tempfile
 
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    corpus, queries = _knn_split(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="spark_graft_ivf_")
     similarity.ivf_index_write(
         corpus, path, n_centroids=8, train_sample=1024
@@ -946,16 +952,22 @@ def q_python_datasource_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor task per 50-id detail chunk, then the same silver flatten
     as rest_ingest_videos — and the same oracle, since both connectors
     must land identical rows."""
+    bronze = _videos_source(spark, spark.read, sf_dir).load()
+    return medallion.bronze_videos_to_silver(bronze)
+
+
+def _videos_source(spark: SparkSession, reader, sf_dir: str):
+    """``reader`` (``spark.read`` or ``spark.readStream``) set up for
+    the first 500 ids of the ``youtube_videos`` Python Data Source
+    (io/pyds.py), registered on ``spark``."""
     from youtube_podcast_data_pipeline_azure_spark.io.pyds import VideosDataSource
 
     spark.dataSource.register(VideosDataSource)
-    bronze = (
-        spark.read.format("youtube_videos")
+    return (
+        reader.format("youtube_videos")
         .option("sf_dir", sf_dir)
         .option("max_results", "500")
-        .load()
     )
-    return medallion.bronze_videos_to_silver(bronze)
 
 
 def q_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -974,16 +986,9 @@ def q_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         GoldExportDataSource,
         read_export,
     )
-    from youtube_podcast_data_pipeline_azure_spark.io.pyds import VideosDataSource
 
     spark.dataSource.register(GoldExportDataSource)
-    spark.dataSource.register(VideosDataSource)
-    bronze = (
-        spark.read.format("youtube_videos")
-        .option("sf_dir", sf_dir)
-        .option("max_results", "500")
-        .load()
-    )
+    bronze = _videos_source(spark, spark.read, sf_dir).load()
     silver = medallion.bronze_videos_to_silver(bronze).withColumn(
         "published_at",
         F.date_format("published_at", "yyyy-MM-dd HH:mm:ss"),
@@ -1008,14 +1013,9 @@ def q_python_datasource_videos_stream(
     import time
     import uuid
 
-    from youtube_podcast_data_pipeline_azure_spark.io.pyds import VideosDataSource
-
-    spark.dataSource.register(VideosDataSource)
     name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
     stream = (
-        spark.readStream.format("youtube_videos")
-        .option("sf_dir", sf_dir)
-        .option("max_results", "500")
+        _videos_source(spark, spark.readStream, sf_dir)
         .option("batch_ids", "100")
         .load()
     )
@@ -1106,11 +1106,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     training (2 Lloyd CTE iterations over the corpus side), round-6
     probe selection (ties: centroid id DESC — the reverse(array_sort)
     contract), round-4 scoring, and the recall aggregate."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.ann_recall_report(
         corpus, queries, k=10, n_centroids=8, nprobe=2, iters=2,
         train_sample=None,
@@ -1140,15 +1136,10 @@ def q_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan plans only the matching detail chunks and the plan carries no
     Spark Filter node (pinned in test_rest_source.py).  Oracle: the
     shared videos-silver SQL restricted to the same id list."""
-    from youtube_podcast_data_pipeline_azure_spark.io.pyds import VideosDataSource
-
-    spark.dataSource.register(VideosDataSource)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     vids = [f"vid{k}" for k in range(0, 200)]
     bronze = (
-        spark.read.format("youtube_videos")
-        .option("sf_dir", sf_dir)
-        .option("max_results", "500")
+        _videos_source(spark, spark.read, sf_dir)
         .option("pushdown", "true")
         .load()
         .where(F.col("id").isin(vids))
@@ -1173,14 +1164,10 @@ def q_python_datasource_stream_sink(
         GoldExportDataSource,
         read_stream_export,
     )
-    from youtube_podcast_data_pipeline_azure_spark.io.pyds import VideosDataSource
 
-    spark.dataSource.register(VideosDataSource)
     spark.dataSource.register(GoldExportDataSource)
     stream = (
-        spark.readStream.format("youtube_videos")
-        .option("sf_dir", sf_dir)
-        .option("max_results", "500")
+        _videos_source(spark, spark.readStream, sf_dir)
         .option("batch_ids", "100")
         .load()
     )
@@ -1324,28 +1311,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Right side deduped to one view per (user, ts) — max event_id wins —
     so the as-of pick is well-defined on both engines."""
-    ev = _t(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    views = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max("event_id").alias("view_event_id"),
-            F.max("value").alias("view_value"),
-        )
-    )
-    out = joins.asof_join_backward(
-        purchases, views, on=["user_id"], left_ts="ts", right_ts="ts"
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("asof_view_event_id").alias("view_event_id"),
-        F.round("asof_view_value", 2).alias("view_value"),
-    )
+    return _asof_query(spark, sf_dir, joins.asof_join_backward)
 
 
 def q_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2771,6 +2737,15 @@ def q_lm_perplexity_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation.lm_perplexity_from_model(spark, path, docs)
 
 
+def _bm25_queries(docs: DataFrame) -> DataFrame:
+    """Every 101st document as a ``(query_id, text)`` BM25 query.
+    doc_id is unique, so this keeps bm25_topk's one-row-per-query_id
+    contract (per-row term dedup equals per-query dedup)."""
+    return docs.where(F.col("doc_id") % 101 == 0).select(
+        F.col("doc_id").alias("query_id"), "text"
+    )
+
+
 def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 keyword retrieval: every ~101st document is a query; top-10
     corpus docs per query by Lucene-variant BM25.  All model inputs
@@ -2779,9 +2754,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     so scores and ranks are integer-total
     (operators/text_mining.py:bm25_topk)."""
     docs = _t(spark, sf_dir, "documents")
-    qs = docs.where(F.col("doc_id") % 101 == 0).select(
-        F.col("doc_id").alias("query_id"), "text"
-    )
+    qs = _bm25_queries(docs)
     return text_mining.bm25_topk(docs, qs, k=10)
 
 
@@ -2796,9 +2769,7 @@ def q_bm25_search_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a genuinely different (and hash-checked) contract from
     bm25_search (operators/text_mining.py:bm25_topk)."""
     docs = _t(spark, sf_dir, "documents")
-    qs = docs.where(F.col("doc_id") % 101 == 0).select(
-        F.col("doc_id").alias("query_id"), "text"
-    )
+    qs = _bm25_queries(docs)
     return text_mining.bm25_topk(docs, qs, k=10, max_df_permille=775)
 
 
@@ -2816,9 +2787,7 @@ def q_bm25_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     docs = _t(spark, sf_dir, "documents")
-    qs = docs.where(F.col("doc_id") % 101 == 0).select(
-        F.col("doc_id").alias("query_id"), "text"
-    )
+    qs = _bm25_queries(docs)
     path = tempfile.mkdtemp(prefix="spark_graft_bm25_")
     text_mining.bm25_index_write(docs, path)
     return text_mining.bm25_topk_from_index(spark, path, qs, k=10)
@@ -2832,13 +2801,7 @@ def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Queries are every ~101st document, same ids on both sides."""
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    lex = text_mining.bm25_topk(
-        docs,
-        docs.where(F.col("doc_id") % 101 == 0).select(
-            F.col("doc_id").alias("query_id"), "text"
-        ),
-        k=20,
-    )
+    lex = text_mining.bm25_topk(docs, _bm25_queries(docs), k=20)
     dense = similarity.knn_bruteforce(
         emb,
         emb.where(F.col("vec_id") % 101 == 0).select(
@@ -2872,13 +2835,9 @@ def q_retrieval_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-quantized reciprocals — the rrf_fuse seam)."""
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    lex20 = text_mining.bm25_topk(
-        docs,
-        docs.where(F.col("doc_id") % 101 == 0).select(
-            F.col("doc_id").alias("query_id"), "text"
-        ),
-        k=20,
-    ).localCheckpoint(eager=True)
+    lex20 = text_mining.bm25_topk(docs, _bm25_queries(docs), k=20).localCheckpoint(
+        eager=True
+    )
     dense20 = (
         similarity.knn_bruteforce(
             emb,
@@ -3277,11 +3236,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 neighbors for the first 5 vectors as queries."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.knn_bruteforce(corpus, queries, k=10)
 
 
@@ -3336,11 +3291,7 @@ def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets, the multiprobe mask XORs, and the in-bucket cosine top-k,
     so the driver hash-verifies the approximate semantics exactly
     (not merely a recall property)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.knn_lsh(corpus, queries, k=10, multiprobe=2)
 
 
@@ -3349,11 +3300,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists, nprobe=4 of 8 (rows-only: approximate recall — measured
     5-9/10 per query at sf0.01; the machinery itself is driver-checked
     via ``knn_ivf_exhaustive``)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.knn_ivf(
         corpus, queries, k=10, n_centroids=8, nprobe=4, train_sample=1024
     )
@@ -3368,11 +3315,7 @@ def q_knn_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     training, literal-folded centroids, list assignment, probe ranking,
     scoring, tie-breaks — with the recall dial at its lossless end
     (the nprobe<k trade-off itself stays rows-only in ``knn_ivf``)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.knn_ivf(
         corpus, queries, k=10, n_centroids=8, nprobe=8, train_sample=1024
     )
@@ -3590,7 +3533,11 @@ def q_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _asof_fixture(spark: SparkSession, sf_dir: str):
+def _asof_query(spark: SparkSession, sf_dir: str, asof_join) -> DataFrame:
+    """Purchases as-of-joined to views by the same user with
+    ``asof_join`` (one of the operators/joins.py as-of variants).  Views
+    are deduped to one per (user, ts) — max event_id wins — so the
+    as-of pick is well-defined on both engines."""
     ev = _t(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -3603,18 +3550,7 @@ def _asof_fixture(spark: SparkSession, sf_dir: str):
             F.max("value").alias("view_value"),
         )
     )
-    return purchases, views
-
-
-def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forward as-of: each purchase matched to the EARLIEST
-    same-or-later view by the same user (operators/joins.py
-    asof_join_forward — union-merge, one shuffle).  DuckDB's native
-    ASOF JOIN with <= is the oracle."""
-    purchases, views = _asof_fixture(spark, sf_dir)
-    out = joins.asof_join_forward(
-        purchases, views, on=["user_id"], left_ts="ts", right_ts="ts"
-    )
+    out = asof_join(purchases, views, on=["user_id"], left_ts="ts", right_ts="ts")
     return out.select(
         "event_id",
         "user_id",
@@ -3622,6 +3558,14 @@ def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("asof_view_event_id").alias("view_event_id"),
         F.round("asof_view_value", 2).alias("view_value"),
     )
+
+
+def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forward as-of: each purchase matched to the EARLIEST
+    same-or-later view by the same user (operators/joins.py
+    asof_join_forward — union-merge, one shuffle).  DuckDB's native
+    ASOF JOIN with <= is the oracle."""
+    return _asof_query(spark, sf_dir, joins.asof_join_forward)
 
 
 def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3630,17 +3574,7 @@ def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames — still a single shuffle (operators/joins.py
     asof_join_nearest).  Oracle composes DuckDB's backward and forward
     ASOF joins with the same tie rule."""
-    purchases, views = _asof_fixture(spark, sf_dir)
-    out = joins.asof_join_nearest(
-        purchases, views, on=["user_id"], left_ts="ts", right_ts="ts"
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("asof_view_event_id").alias("view_event_id"),
-        F.round("asof_view_value", 2).alias("view_value"),
-    )
+    return _asof_query(spark, sf_dir, joins.asof_join_nearest)
 
 
 def q_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4280,21 +4214,14 @@ def q_cap_per_source_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation.cap_per_source_two_phase(docs, cap=10, buckets=64)
 
 
-def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dolma-style corpus-wide exact paragraph dedup, first occurrence
-    survives (r11; operators/curation.py:dedup_paragraphs).
-    Paragraphs here are 3-token chunks (the fixture has no newlines;
-    3-token chunks repeat across documents, exercising both the
-    within-doc and cross-doc removal paths — a different grain than
-    boilerplate_lines' 2-token chunks, and DIFFERENT semantics: the
-    canonical copy survives instead of every copy dropping).  Oracle
-    replays the chunking, the integer occurrence-key min, and the
-    ordered reassembly."""
+def _paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, paras)`` over documents, where a paragraph is a
+    3-token chunk — the grain every paragraph-dedup query shares."""
     d = _t(spark, sf_dir, "documents")
     d2 = d.select("doc_id", tokenize(F.col("text")).alias("_toks"))
-    # ADVICE r11: sequence(0, -1) on a zero-token doc yields [0, -1]
-    # (implicit step -1), i.e. two phantom empty paragraphs, while the
-    # oracle's generate_series(0, -1) yields [] — guard the empty case.
+    # sequence(0, -1) on a zero-token doc yields [0, -1] (implicit step
+    # -1), i.e. two phantom empty paragraphs, while the oracle's
+    # generate_series(0, -1) yields [] — guard the empty case.
     seq = F.when(
         F.size("_toks") > 0,
         F.sequence(
@@ -4307,16 +4234,33 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice(F.col("_toks"), (i * 3 + 1).cast("int"), 3), " "
         ),
     )
-    # localCheckpoint before the operator's posexplode (re-evaluation
+    # localCheckpoint before the operators' posexplode (re-evaluation
     # traps #2/#4 — the boilerplate_lines precedent)
-    with_paras = d2.select("doc_id", paras.alias("paras")).localCheckpoint()
-    out = curation.dedup_paragraphs(with_paras, paras_col="paras")
+    return d2.select("doc_id", paras.alias("paras")).localCheckpoint()
+
+
+def _kept_paragraphs(out: DataFrame) -> DataFrame:
     return out.select(
         "doc_id",
         F.array_join("paras", " | ").alias("kept_text"),
         "n_paras",
         "n_paras_removed",
     )
+
+
+def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dolma-style corpus-wide exact paragraph dedup, first occurrence
+    survives (r11; operators/curation.py:dedup_paragraphs).
+    Paragraphs here are 3-token chunks (the fixture has no newlines;
+    3-token chunks repeat across documents, exercising both the
+    within-doc and cross-doc removal paths — a different grain than
+    boilerplate_lines' 2-token chunks, and DIFFERENT semantics: the
+    canonical copy survives instead of every copy dropping).  Oracle
+    replays the chunking, the integer occurrence-key min, and the
+    ordered reassembly."""
+    with_paras = _paragraphs(spark, sf_dir)
+    out = curation.dedup_paragraphs(with_paras, paras_col="paras")
+    return _kept_paragraphs(out)
 
 
 def q_paragraph_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4331,21 +4275,7 @@ def q_paragraph_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     (parity in test_streaming.py).  Only (digest, long, long) cross
     the exchange; the oracle replays chunking, md5, min-key decode via
     integer div/mod, and the count."""
-    d = _t(spark, sf_dir, "documents")
-    d2 = d.select("doc_id", tokenize(F.col("text")).alias("_toks"))
-    seq = F.when(
-        F.size("_toks") > 0,
-        F.sequence(
-            F.lit(0).cast("long"), F.floor((F.size("_toks") - 1) / 3)
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    paras = F.transform(
-        seq,
-        lambda i: F.array_join(
-            F.slice(F.col("_toks"), (i * 3 + 1).cast("int"), 3), " "
-        ),
-    )
-    with_paras = d2.select("doc_id", paras.alias("paras")).localCheckpoint()
+    with_paras = _paragraphs(spark, sf_dir)
     return curation.paragraph_registry(with_paras, paras_col="paras")
 
 
@@ -4359,31 +4289,12 @@ def q_paragraph_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     own first occurrence (the guarded occurrence key).  Oracle replays
     the split, the registry digest set, the within-shard min, and the
     ordered reassembly."""
-    d = _t(spark, sf_dir, "documents")
-    d2 = d.select("doc_id", tokenize(F.col("text")).alias("_toks"))
-    seq = F.when(
-        F.size("_toks") > 0,
-        F.sequence(
-            F.lit(0).cast("long"), F.floor((F.size("_toks") - 1) / 3)
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    paras = F.transform(
-        seq,
-        lambda i: F.array_join(
-            F.slice(F.col("_toks"), (i * 3 + 1).cast("int"), 3), " "
-        ),
-    )
-    with_paras = d2.select("doc_id", paras.alias("paras")).localCheckpoint()
+    with_paras = _paragraphs(spark, sf_dir)
     standing = with_paras.where(F.col("doc_id") % 2 == 0)
     arriving = with_paras.where(F.col("doc_id") % 2 == 1)
     reg = curation.paragraph_registry(standing, paras_col="paras")
     out = curation.dedup_paragraphs_incremental(arriving, reg, paras_col="paras")
-    return out.select(
-        "doc_id",
-        F.array_join("paras", " | ").alias("kept_text"),
-        "n_paras",
-        "n_paras_removed",
-    )
+    return _kept_paragraphs(out)
 
 
 def q_paragraph_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4404,21 +4315,7 @@ def q_paragraph_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from youtube_podcast_data_pipeline_azure_spark.streaming import sinks
 
-    d = _t(spark, sf_dir, "documents")
-    d2 = d.select("doc_id", tokenize(F.col("text")).alias("_toks"))
-    seq = F.when(
-        F.size("_toks") > 0,
-        F.sequence(
-            F.lit(0).cast("long"), F.floor((F.size("_toks") - 1) / 3)
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    paras = F.transform(
-        seq,
-        lambda i: F.array_join(
-            F.slice(F.col("_toks"), (i * 3 + 1).cast("int"), 3), " "
-        ),
-    )
-    with_paras = d2.select("doc_id", paras.alias("paras")).localCheckpoint()
+    with_paras = _paragraphs(spark, sf_dir)
     standing = with_paras.where(F.col("doc_id") % 2 == 0)
     arriving = with_paras.where(F.col("doc_id") % 2 == 1)
     reg_path = tempfile.mkdtemp(prefix="spark_graft_pds_reg_")
@@ -4448,12 +4345,7 @@ def q_paragraph_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # committed-batch guard must make it a no-op or the oracle mismatches
     sink(arriving.where(F.pmod(F.col("doc_id"), F.lit(8)) == 1), 0)
     back = spark.read.parquet(out + "/kept")
-    return back.select(
-        "doc_id",
-        F.array_join("paras", " | ").alias("kept_text"),
-        "n_paras",
-        "n_paras_removed",
-    )
+    return _kept_paragraphs(back)
 
 
 def q_minhash_index_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4495,21 +4387,7 @@ def q_paragraph_registry_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry SQL verbatim: merge(shard registries) must be bit-equal
     to one recompute over everything (min of re-encoded occurrence
     keys + summed counts are commutative monoids)."""
-    d = _t(spark, sf_dir, "documents")
-    d2 = d.select("doc_id", tokenize(F.col("text")).alias("_toks"))
-    seq = F.when(
-        F.size("_toks") > 0,
-        F.sequence(
-            F.lit(0).cast("long"), F.floor((F.size("_toks") - 1) / 3)
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    paras = F.transform(
-        seq,
-        lambda i: F.array_join(
-            F.slice(F.col("_toks"), (i * 3 + 1).cast("int"), 3), " "
-        ),
-    )
-    with_paras = d2.select("doc_id", paras.alias("paras")).localCheckpoint()
+    with_paras = _paragraphs(spark, sf_dir)
     regs = [
         curation.paragraph_registry(
             with_paras.where(F.pmod(F.col("doc_id"), F.lit(3)) == k),
@@ -4669,6 +4547,23 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex constants."""
     docs = _t(spark, sf_dir, "documents")
     d = F.col("doc_id")
+    qs = F.element_at(
+        F.array(
+            F.lit("?utm_source=feed&b=2&a=1"),
+            F.lit("?a=1&b=2&utm_campaign=x"),
+            F.lit("?b=2&a=1"),
+            F.lit(""),
+        ),
+        (d % 4 + 1).cast("int"),
+    )
+    frag = F.when(d % 7 == 0, F.lit("#frag")).otherwise(F.lit(""))
+    url = F.concat(*_planted_url_parts(d), qs, frag)
+    return curation.domain_mix_report(docs.withColumn("url", url))
+
+
+def _planted_url_parts(d: Column) -> list[Column]:
+    """Scheme, host, port and path of the messy crawl URL planted on
+    document ``d`` (domain_mix and domain_blocklist share them)."""
     host = F.element_at(
         F.array(
             F.lit("www.Example.COM"),
@@ -4688,18 +4583,7 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         (d % 40).cast("string"),
         F.when(d % 2 == 0, F.lit("/")).otherwise(F.lit("")),
     )
-    qs = F.element_at(
-        F.array(
-            F.lit("?utm_source=feed&b=2&a=1"),
-            F.lit("?a=1&b=2&utm_campaign=x"),
-            F.lit("?b=2&a=1"),
-            F.lit(""),
-        ),
-        (d % 4 + 1).cast("int"),
-    )
-    frag = F.when(d % 7 == 0, F.lit("#frag")).otherwise(F.lit(""))
-    url = F.concat(scheme, host, port, path, qs, frag)
-    return curation.domain_mix_report(docs.withColumn("url", url))
+    return [scheme, host, port, path]
 
 
 def q_turn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4725,6 +4609,12 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword-rich clause on %19 so the stop-hit and keep=true branches
     are all exercised.  The oracle replays the identical synth and the
     integer deci/permille formulas from the same constants."""
+    return curation.gopher_quality_report(_gopher_planted_docs(spark, sf_dir))
+
+
+def _gopher_planted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents with the Gopher rule-triggering shapes planted
+    (gopher_quality and gopher_rule_attribution share them)."""
     docs = _t(spark, sf_dir, "documents")
     d = F.col("doc_id")
     t = F.col("text")
@@ -4740,7 +4630,7 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(t)
     )
-    return curation.gopher_quality_report(docs.withColumn("text", text2))
+    return docs.withColumn("text", text2)
 
 
 def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4753,16 +4643,7 @@ def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical re-lining and rules."""
     docs = _t(spark, sf_dir, "documents")
     d = F.col("doc_id")
-    toks = F.split(F.col("text"), " ")
-    idx = F.sequence(
-        F.lit(0), ((F.size(toks) - F.lit(1)) / F.lit(6)).cast("int")
-    )
-    lined = F.array_join(
-        F.transform(
-            idx, lambda i: F.array_join(F.slice(toks, i * 6 + 1, 6), " ")
-        ),
-        "\n",
-    )
+    lined = _six_token_lines(F.col("text"))
     lined = F.when(
         d % 2 == 0,
         F.concat(F.replace(lined, F.lit("\n"), F.lit(".\n")), F.lit(".")),
@@ -4776,6 +4657,21 @@ def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("we use cookie tracking here.\n"), lined),
     ).otherwise(lined)
     return curation.c4_line_filter(docs.withColumn("text", lined))
+
+
+def _six_token_lines(text: Column) -> Column:
+    """``text`` re-lined as newline-joined 6-token lines (the fixture
+    has no newlines)."""
+    toks = F.split(text, " ")
+    idx = F.sequence(
+        F.lit(0), ((F.size(toks) - F.lit(1)) / F.lit(6)).cast("int")
+    )
+    return F.array_join(
+        F.transform(
+            idx, lambda i: F.array_join(F.slice(toks, i * 6 + 1, 6), " ")
+        ),
+        "\n",
+    )
 
 
 def q_text_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4864,11 +4760,7 @@ def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     first 5 vectors kept exact, distance is the broadcast integer-LUT
     ADC sum.  Exact integers end-to-end — the oracle replays training,
     coding, LUT, and ranking."""
-    emb = _t(spark, sf_dir, "embeddings")
-    corpus = emb.where(F.col("vec_id") >= 5)
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    corpus, queries = _knn_split(spark, sf_dir)
     cb = similarity.pq_train(corpus, train_sample=None)
     return similarity.pq_ann(corpus, queries, cb, k=10)
 
@@ -4885,11 +4777,7 @@ def q_pq_ann_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-identical to the in-plan construction."""
     import tempfile
 
-    emb = _t(spark, sf_dir, "embeddings")
-    corpus = emb.where(F.col("vec_id") >= 5)
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    corpus, queries = _knn_split(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="spark_graft_pq_")
     similarity.pq_index_write(corpus, path, train_sample=None)
     return similarity.pq_ann_from_index(spark, path, queries, k=10)
@@ -4901,11 +4789,7 @@ def q_knn_ivfpq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_ann bit-for-bit — certifying the coarse assignment, probe
     ranking, code plumbing, and ADC join exactly the way
     knn_ivf_exhaustive certifies IVF-Flat.  Oracle: the pq_ann SQL."""
-    emb = _t(spark, sf_dir, "embeddings")
-    corpus = emb.where(F.col("vec_id") >= 5)
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.knn_ivfpq(
         corpus, queries, k=10, n_centroids=16, nprobe=16,
         train_sample=None,
@@ -4921,11 +4805,7 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     is certified by knn_ivfpq_exhaustive's hash-matched twin (and the
     coarse/fine parts separately by knn_ivf_exhaustive / pq_codes /
     pq_ann)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    corpus = emb.where(F.col("vec_id") >= 5)
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.knn_ivfpq(
         corpus, queries, k=10, n_centroids=16, nprobe=4,
         train_sample=None,
@@ -4942,11 +4822,7 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE chain), integer PQ training (the pq_codes CTE chain,
     'pq'-prefixed to compose), round-6 probe ranking, integer ADC
     scoring, round-4 exact ranking — every tie-break total."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.ivfpq_recall_report(
         corpus, queries, k=10, n_centroids=8, nprobe=2, iters=2,
         m_subspaces=4, k_centroids=8, train_sample=None,
@@ -4963,13 +4839,8 @@ def q_nb_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     before committing a cutoff to a 100-TB run.  One scoring pass +
     one conditional aggregate; integer permille end-to-end, so the
     oracle retrains, rescores, and re-aggregates bit-for-bit."""
-    docs = _t(spark, sf_dir, "documents")
-    labeled = docs.where(F.col("doc_id") % 3 != 0).withColumn(
-        "label", F.col("lang") == "en"
-    )
-    eval_docs = docs.where(F.col("doc_id") % 3 == 0).withColumn(
-        "label", F.col("lang") == "en"
-    )
+    labeled, held_out = _nb_split(spark, sf_dir)
+    eval_docs = held_out.withColumn("label", F.col("lang") == "en")
     return curation.nb_threshold_curve(labeled, eval_docs)
 
 
@@ -4984,13 +4855,8 @@ def q_nb_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention as nb_threshold_curve (train doc_id%3 != 0, eval %3
     == 0, label = lang=='en'); one scoring pass + a 1-row percentile
     aggregate + a 10-row aggregate."""
-    docs = _t(spark, sf_dir, "documents")
-    labeled = docs.where(F.col("doc_id") % 3 != 0).withColumn(
-        "label", F.col("lang") == "en"
-    )
-    eval_docs = docs.where(F.col("doc_id") % 3 == 0).withColumn(
-        "label", F.col("lang") == "en"
-    )
+    labeled, held_out = _nb_split(spark, sf_dir)
+    eval_docs = held_out.withColumn("label", F.col("lang") == "en")
     return curation.nb_reliability_table(labeled, eval_docs, n_bins=10)
 
 
@@ -5002,11 +4868,7 @@ def q_embedding_dim_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory/IO-halving dial a 100-TB ANN index is sized with.  One
     corpus pass scores every truncation; the knn_bruteforce round-4 /
     id-asc tie contract makes every ranking SQL-replayable."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.dim_truncation_report(
         corpus, queries, k=10, dims=(16, 32, 64)
     )
@@ -5022,6 +4884,12 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle is the INDEPENDENT O(n²) brute force (all ordered pairs,
     exact list_intersect ratio) — certifying the prefix filter's
     losslessness, not replaying it."""
+    return dedup.containment_pairs(_quote_corpus(spark, sf_dir), threshold=0.8)
+
+
+def _quote_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents plus a 12-token "quote" doc (doc_id + 100000) for
+    every doc_id%7==0 original (containment_pairs/_dedup share it)."""
     docs = _t(spark, sf_dir, "documents")
     quotes = docs.where(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
@@ -5030,7 +4898,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     corpus = docs.select("doc_id", "text").unionByName(quotes)
-    return dedup.containment_pairs(corpus, threshold=0.8)
+    return corpus
 
 
 def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5042,15 +4910,7 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutual-containment groups keep exactly one survivor.  Oracle is
     the same independent brute-force pair base + the dominance pick
     replayed in SQL."""
-    docs = _t(spark, sf_dir, "documents")
-    quotes = docs.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.array_join(
-            F.slice(F.split(F.col("text"), " "), 1, 12), " "
-        ).alias("text"),
-    )
-    corpus = docs.select("doc_id", "text").unionByName(quotes)
-    return dedup.containment_dedup(corpus, threshold=0.8)
+    return dedup.containment_dedup(_quote_corpus(spark, sf_dir), threshold=0.8)
 
 
 def q_streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5077,11 +4937,7 @@ def q_knn_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number tie-breaks), so the oracle replays the full composition
     rather than checking a recall claim; rerank ≥ |corpus| equals
     knn_bruteforce bit-for-bit (pinned in tests)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    corpus, queries = _knn_split(spark, sf_dir)
     return similarity.knn_sq8_rerank(corpus, queries, k=10, rerank=32)
 
 
@@ -5108,18 +4964,31 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow setup dominate 1.5k rows), unlike the pure-JVM expression
     pipelines where spread() wins; at scale media scans are multi-split
     already and the kernel parallelism comes from the source."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    hs = F.substring(
-        F.concat(
-            *[
-                F.md5(F.concat(F.col("text"), F.lit(s))) if s else F.md5("text")
-                for s in ["", "x", "y", "z", "w", "v", "u", "t", "s", "r"]
-            ]
-        ),
-        1,
-        294,
+    assets = _planted_media_assets(
+        spark, sf_dir, "image", ["", "x", "y", "z", "w", "v", "u", "t", "s", "r"], 294
+    ).withColumns({"width": F.lit(7), "height": F.lit(7)})
+    pairs = multimodal.image_near_dup_pairs(assets, grid=7, max_hamming=3)
+    return pairs.select(
+        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
-    hx = d.select("doc_id", hs.alias("hs"))
+
+
+def _planted_media_assets(
+    spark: SparkSession, sf_dir: str, modality: str, salts: list[str], n_hex: int
+) -> DataFrame:
+    """``(asset_id, modality, payload)`` media assets whose payload is
+    the first ``n_hex`` hex digits of md5 digests of the doc text, one
+    per salt, with planted exact twins (doc_id % 11, id + 1e6) and
+    first-byte perturbations (doc_id % 7, id + 2e6)."""
+    hs = F.concat(
+        *[
+            F.md5(F.concat(F.col("text"), F.lit(s))) if s else F.md5("text")
+            for s in salts
+        ]
+    )
+    if n_hex < 32 * len(salts):
+        hs = F.substring(hs, 1, n_hex)
+    hx = _t(spark, sf_dir, "documents").select("doc_id", hs.alias("hs"))
     variants = (
         hx.select(F.col("doc_id").alias("asset_id"), "hs")
         .unionByName(
@@ -5131,21 +5000,15 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             hx.where(F.col("doc_id") % 7 == 0).select(
                 (F.col("doc_id") + 2000000).alias("asset_id"),
                 F.concat(
-                    F.lit("00"), F.expr("substring(hs, 3, 292)")
+                    F.lit("00"), F.expr(f"substring(hs, 3, {n_hex - 2})")
                 ).alias("hs"),
             )
         )
     )
-    assets = variants.select(
+    return variants.select(
         "asset_id",
-        F.lit("image").alias("modality"),
+        F.lit(modality).alias("modality"),
         F.unhex("hs").alias("payload"),
-        F.lit(7).alias("width"),
-        F.lit(7).alias("height"),
-    )
-    pairs = multimodal.image_near_dup_pairs(assets, grid=7, max_hamming=3)
-    return pairs.select(
-        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
 
 
@@ -5166,27 +5029,7 @@ def q_domain_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract via broadcast semi-join, unit-tested).  The oracle replays
     the URL synth, the url.py domain twin, and the suffix test."""
     docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    host = F.element_at(
-        F.array(
-            F.lit("www.Example.COM"),
-            F.lit("docs.example.com"),
-            F.lit("News.Site.org"),
-            F.lit("cdn.assets.net"),
-        ),
-        (d % 4 + 1).cast("int"),
-    )
-    scheme = F.when(d % 3 == 0, F.lit("HTTPS://")).otherwise(F.lit("http://"))
-    port = F.when(
-        d % 5 == 0,
-        F.when(d % 3 == 0, F.lit(":443")).otherwise(F.lit(":80")),
-    ).otherwise(F.lit(""))
-    path = F.concat(
-        F.lit("/p/"),
-        (d % 40).cast("string"),
-        F.when(d % 2 == 0, F.lit("/")).otherwise(F.lit("")),
-    )
-    url = F.concat(scheme, host, port, path)
+    url = F.concat(*_planted_url_parts(F.col("doc_id")))
     return curation.domain_blocklist_report(
         docs.withColumn("url", url), list(_BLOCKLIST_DOMAINS)
     )
@@ -5207,34 +5050,8 @@ def q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks·n²/2^(bits/blocks), so width grows with log(corpus) — at
     32 bits the 10× bench corpus measured 10.3× wall from chunk
     collisions; at 48 the join stays collision-sparse."""
-    d = _t(spark, sf_dir, "documents")
-    hs = F.concat(
-        *[
-            F.md5(F.concat(F.col("text"), F.lit(s))) if s else F.md5("text")
-            for s in ["", "a", "b", "c", "d", "e", "f", "g"]
-        ]
-    )
-    hx = d.select("doc_id", hs.alias("hs"))
-    variants = (
-        hx.select(F.col("doc_id").alias("asset_id"), "hs")
-        .unionByName(
-            hx.where(F.col("doc_id") % 11 == 0).select(
-                (F.col("doc_id") + 1000000).alias("asset_id"), "hs"
-            )
-        )
-        .unionByName(
-            hx.where(F.col("doc_id") % 7 == 0).select(
-                (F.col("doc_id") + 2000000).alias("asset_id"),
-                F.concat(
-                    F.lit("00"), F.expr("substring(hs, 3, 254)")
-                ).alias("hs"),
-            )
-        )
-    )
-    assets = variants.select(
-        "asset_id",
-        F.lit("audio").alias("modality"),
-        F.unhex("hs").alias("payload"),
+    assets = _planted_media_assets(
+        spark, sf_dir, "audio", ["", "a", "b", "c", "d", "e", "f", "g"], 256
     )
     pairs = multimodal.audio_near_dup_pairs(assets, n_bits=48, max_hamming=3)
     return pairs.select(
@@ -5251,22 +5068,7 @@ def q_gopher_rule_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB pass.  One scan + one conditional aggregate; the oracle
     composes per-rule fail flags over the gopher_quality twin, so the
     signal arithmetic is shared verbatim."""
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    t = F.col("text")
-    text2 = (
-        F.when(d % 11 == 0, F.concat(F.lit("- "), t))
-        .when(d % 13 == 0, F.concat(t, F.lit("...")))
-        .when(d % 17 == 0, F.concat(t, F.lit(" # ## ### ####")))
-        .when(
-            d % 19 == 0,
-            F.concat(
-                t, F.lit(" the cat and the dog have fun with that wool.")
-            ),
-        )
-        .otherwise(t)
-    )
-    return curation.gopher_rule_attribution(docs.withColumn("text", text2))
+    return curation.gopher_rule_attribution(_gopher_planted_docs(spark, sf_dir))
 
 
 def q_streaming_near_dup_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5430,27 +5232,7 @@ def q_language_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (the CCNet bucket-by-language step, as a rewrite rather than
     a report).  Oracle replays the synth, the per-line ID, and an
     ORDER BY string_agg rebuild."""
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    toks = F.split(F.col("text"), " ")
-    idx = F.sequence(
-        F.lit(0), ((F.size(toks) - F.lit(1)) / F.lit(6)).cast("int")
-    )
-    lined = F.array_join(
-        F.transform(
-            idx, lambda i: F.array_join(F.slice(toks, i * 6 + 1, 6), " ")
-        ),
-        "\n",
-    )
-    lined = F.when(
-        d % 4 == 0,
-        F.concat(F.lit("der hund ist nicht da und ich\n"), lined),
-    ).otherwise(lined)
-    lined = F.when(
-        d % 6 == 0,
-        F.concat(lined, F.lit("\nle chat est dans la maison pour")),
-    ).otherwise(lined)
-    return curation.split_by_line_language(docs.withColumn("text", lined))
+    return curation.split_by_line_language(_multilingual_pages(spark, sf_dir))
 
 
 def q_trimmed_means(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5642,6 +5424,17 @@ def q_rarity_bins_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_mining.rarity_bins_by_lang(_t(spark, sf_dir, "documents"))
 
 
+def _nb_split(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The NB seed-set fixture: ``labeled`` documents (doc_id % 3 != 0,
+    label = lang == 'en') train; the held-out doc_id % 3 == 0 slice is
+    scored."""
+    docs = _t(spark, sf_dir, "documents")
+    labeled = docs.where(F.col("doc_id") % 3 != 0).withColumn(
+        "label", F.col("lang") == "en"
+    )
+    return labeled, docs.where(F.col("doc_id") % 3 == 0)
+
+
 def q_nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Naive-Bayes quality classifier (r9 close;
     operators/curation.py:nb_quality_scores) — the deterministic
@@ -5651,11 +5444,7 @@ def q_nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture synth), score the held-out slice by integer micro-unit
     log-odds.  Quantization is the lm_perplexity ln seam, so the
     oracle retrains and rescores bit-for-bit."""
-    docs = _t(spark, sf_dir, "documents")
-    labeled = docs.where(F.col("doc_id") % 3 != 0).withColumn(
-        "label", F.col("lang") == "en"
-    )
-    to_score = docs.where(F.col("doc_id") % 3 == 0)
+    labeled, to_score = _nb_split(spark, sf_dir)
     return curation.nb_quality_scores(labeled, to_score)
 
 
@@ -5668,18 +5457,16 @@ def q_line_language_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     roll up to dominant language, its permille share, and distinct
     line languages.  The oracle replays the synth, the per-line ID
     (same lexicon constants via language_id_sql), and the argmax."""
+    return curation.line_language_report(_multilingual_pages(spark, sf_dir))
+
+
+def _multilingual_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents re-lined into 6-token lines with a planted German line
+    on doc_id%4 and a French line on %6 (line_language_mix and
+    language_split share them)."""
     docs = _t(spark, sf_dir, "documents")
     d = F.col("doc_id")
-    toks = F.split(F.col("text"), " ")
-    idx = F.sequence(
-        F.lit(0), ((F.size(toks) - F.lit(1)) / F.lit(6)).cast("int")
-    )
-    lined = F.array_join(
-        F.transform(
-            idx, lambda i: F.array_join(F.slice(toks, i * 6 + 1, 6), " ")
-        ),
-        "\n",
-    )
+    lined = _six_token_lines(F.col("text"))
     lined = F.when(
         d % 4 == 0,
         F.concat(F.lit("der hund ist nicht da und ich\n"), lined),
@@ -5688,7 +5475,7 @@ def q_line_language_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         d % 6 == 0,
         F.concat(lined, F.lit("\nle chat est dans la maison pour")),
     ).otherwise(lined)
-    return curation.line_language_report(docs.withColumn("text", lined))
+    return docs.withColumn("text", lined)
 
 
 def q_nb_quality_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5701,11 +5488,7 @@ def q_nb_quality_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     be hash-identical to in-plan training."""
     import tempfile
 
-    docs = _t(spark, sf_dir, "documents")
-    labeled = docs.where(F.col("doc_id") % 3 != 0).withColumn(
-        "label", F.col("lang") == "en"
-    )
-    to_score = docs.where(F.col("doc_id") % 3 == 0)
+    labeled, to_score = _nb_split(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="spark_graft_nb_")
     curation.nb_model_write(labeled, path)
     return curation.nb_scores_from_model(spark, path, to_score)
@@ -5717,42 +5500,17 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order is a verification rotation, not taxonomy: the
-    driver's per-round correctness check covers the FIRST 50 entries,
-    so each round front-loads queries needing driver evidence.
-    Cumulative state at r12 build: 280 registered, 276
-    DuckDB-oracle-checked, 4 rows-only by documented contract (the
-    ``knn_ivf`` and ``knn_ivfpq`` nprobe dials and the two raw
-    t-digest sketches — each certified by a hash-checked
-    exhaustive/accuracy twin); staleness is tool-tracked
-    (``tools/staleness.py`` joins this registry against every
-    CORRECTNESS_r*.json).  Capstone at r10 close: the ENTIRE registry
-    verified on a plain ANSI local[32] session at sf0.01 (272/272
-    then-registered hash-matched) and on the engine session at
-    sf0.001.
+    """The registered query surface: name -> ``fn(spark, sf_dir)``
+    returning the query's DataFrame.
 
-    The r14 window (``_R14_WINDOW`` below — the dict literal keeps its
-    historical grouping; the rotation is applied programmatically at
-    the end): (A) the 5 r13-tail registrations with no driver row yet;
-    (B) the 17 queries whose operators optimization round 14 changed —
-    a fresh driver hash-PASS on exactly the touched code is the
-    round's no-regression evidence; (C) the 28 oldest oracle-stale
-    fills in ledger order per ``tools/staleness.py`` (r8 evidence).
-    The rows-only-by-contract dials (``knn_ivf``, ``knn_ivfpq``,
-    ``tdigest_quantiles``, ``tdigest_by_key``) stay out of the window
-    per VERDICT r9/r10 — their hash-checked exhaustive/accuracy twins
-    carry the evidence.  Every window query is pre-verified on a
-    PLAIN local[32] session (driver conditions: ANSI on, no engine
-    confs) against the DuckDB oracle at sf0.01
-    (``tools/preverify_r14_band.log``).  The r13 window list stays
-    below as ``_R13_WINDOW`` for the ledger's history."""
+    The first 50 entries are the correctness-check window: the names
+    in ``_R14_WINDOW``, guarded to be exactly 50 registered queries,
+    in that order; every other entry follows in registration order.  Every query outside ``oracle_sql()`` is rows-only by
+    contract (the ``knn_ivf`` and ``knn_ivfpq`` nprobe dials and the
+    two raw t-digest sketches), each certified by a hash-checked
+    exhaustive or accuracy twin; ``tools/staleness.py`` reports each
+    query's latest correctness evidence."""
     out = {
-        # ===== r09 grouping (historical; see _R13_WINDOW below) =====
-        # part A: never driver-checked — the two persistence
-        # roundtrips added after the r8 window was spent, plus the
-        # six queries NEW this round (Gopher/C4 quality rules,
-        # unicode normalization, LSH band tuning, product
-        # quantization codes + ADC search)
         "bm25_search_persisted": q_bm25_search_persisted,
         "lm_perplexity_persisted": q_lm_perplexity_persisted,
         "gopher_quality": q_gopher_quality,
@@ -5761,11 +5519,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_band_tuning": q_minhash_band_tuning,
         "pq_codes": q_pq_codes,
         "pq_ann": q_pq_ann,
-        # part B: re-checks of queries whose code changed since
-        # their last driver stamp — the six late-r8 perf-pass
-        # rewrites (radix-8 prefix doubling; DSIR raw-gram/ratio
-        # checkpoints) and this round's url-regex / bm25-guard
-        # touches (domain_mix, bm25_search_pruned)
         "contamination_spans": q_contamination_spans,
         "exact_substring_spans": q_exact_substring_spans,
         "longest_repeated_substrings": q_longest_repeated_substrings,
@@ -5774,9 +5527,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsir_resample": q_dsir_resample,
         "domain_mix": q_domain_mix,
         "bm25_search_pruned": q_bm25_search_pruned,
-        # part C: the 34 oldest staleness fills (r4 evidence,
-        # ledger order) — the remaining 8 r4-stale queries lead
-        # the below-the-line queue for r10
         "contamination_report": q_contamination_report,
         "repetition_signals": q_repetition_signals,
         "pii_scan": q_pii_scan,
@@ -5811,10 +5561,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "training_shards": q_training_shards,
         "bpe_merges": q_bpe_merges,
         "bpe_segment": q_bpe_segment,
-        # ============ end of driver's 50-slot window ============
-        # below the line: oldest driver evidence first (the 8
-        # displaced r4 fills, then r5, r6, r7, r8) — the ledger in
-        # tools/staleness.py drives each round's rotation
         "zipf_fit": q_zipf_fit,
         "length_drift": q_length_drift,
         "dq_referential_orphans": q_dq_referential_orphans,
@@ -6003,18 +5749,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cms_heavy_hitters": q_cms_heavy_hitters,
         "mg_heavy_hitters": q_mg_heavy_hitters,
         "dq_report": q_dq_report,
-        # r9-close addition (registered after the r9 window was spent;
-        # never driver-checked, queues for r10)
         "pq_ann_persisted": q_pq_ann_persisted,
         "knn_ivfpq_exhaustive": q_knn_ivfpq_exhaustive,
         "knn_ivfpq": q_knn_ivfpq,
         "nb_quality_classifier": q_nb_quality_classifier,
         "line_language_mix": q_line_language_mix,
         "nb_quality_persisted": q_nb_quality_persisted,
-        # r10 addition: the recall audit for knn_ivfpq's nprobe dial
         "ivfpq_recall": q_ivfpq_recall,
-        # r10 tail additions (registered after the r10 window was
-        # pre-verified; never driver-checked — first in line for r11)
         "nb_threshold_curve": q_nb_threshold_curve,
         "embedding_dim_truncation": q_embedding_dim_truncation,
         "quality_signals": q_quality_signals,
@@ -6043,16 +5784,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fd_entropy": q_fd_entropy,
         "trimmed_means": q_trimmed_means,
         "language_split": q_language_split,
-        # ===== r11 additions (tail per the rotation protocol) =====
         "nb_reliability": q_nb_reliability,
         "paragraph_dedup": q_paragraph_dedup,
         "cap_per_source": q_cap_per_source,
-        # ===== r12 additions (tail per the rotation protocol) =====
         "cap_per_source_windowed": q_cap_per_source_windowed,
         "cap_per_source_skew": q_cap_per_source_skew,
         "paragraph_registry": q_paragraph_registry,
         "paragraph_dedup_incremental": q_paragraph_dedup_incremental,
-        # ===== r13 additions (tail per the rotation protocol) =====
         "corpus_diff": q_corpus_diff,
         "corpus_churn": q_corpus_churn,
         "paragraph_dedup_stream": q_paragraph_dedup_stream,
@@ -6071,68 +5809,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {k: out[k] for k in _R14_WINDOW} | {
         k: v for k, v in out.items() if k not in window
     }
-
-
-#: r13 driver-check band (VERDICT r12 #1): (A) the 4 r12-tail
-#: registrations with no driver row; (B) the 46 oldest oracle-stale
-#: fills (r7/r8 evidence, ledger order).  Entire band pre-verified at
-#: r12 close on a plain ANSI local[32] session at sf0.01
-#: (tools/preverify_r13_band.log, 50/50).  Rows-only dials stay out
-#: per VERDICT r9/r10.
-_R13_WINDOW = [
-    # A: r12-tail additions, no driver evidence yet
-    "cap_per_source_windowed",
-    "cap_per_source_skew",
-    "paragraph_registry",
-    "paragraph_dedup_incremental",
-    # B: the 46 oldest oracle-stale fills (r7/r8 ledger order)
-    "winnowing_fingerprints",
-    "embedding_norms",
-    "knn_bruteforce",
-    "knn_label_accuracy",
-    "hash_sample",
-    "weighted_sample",
-    "chunk_documents",
-    "pack_sequences",
-    "media_features",
-    "media_frame_sample",
-    "higher_order_funcs",
-    "csv_roundtrip",
-    "clustered_roundtrip",
-    "schema_evolution",
-    "value_outliers",
-    "cohort_retention",
-    "funnel_conversion",
-    "fuzzy_vocab",
-    "session_conversion",
-    "zorder_key",
-    "scd2_intervals",
-    "upsert_latest_wins",
-    "profile_table",
-    "enrich_documents",
-    "enrich_video_titles",
-    "mixture_plan",
-    "mg_heavy_hitters_by_key",
-    "python_datasource_sink",
-    "rest_ingest_videos",
-    "rest_ingest_comments",
-    "cms_heavy_hitters",
-    "mg_heavy_hitters",
-    "dq_report",
-    "zipf_fit",
-    "length_drift",
-    "dq_referential_orphans",
-    "dq_unique_violations",
-    "table_fingerprint",
-    "snapshot_diff",
-    "volume_shipping",
-    "small_quantity_revenue",
-    "disjunctive_revenue",
-    "promo_part_suppliers",
-    "sql_api_top_orders",
-    "udtf_sentences",
-    "incremental_agg",
-]
 
 
 #: r14 driver-check band (optimization round 2): (A) the 5 r13-tail
@@ -6286,7 +5962,9 @@ def oracle_sql() -> dict[str, str]:
     # ratio, like the operators): the oracle for minhash_near_dup and
     # near_dup_pipeline, whose exact-verified outputs equal this set at
     # complete banding recall.
-    exact_jaccard_pairs = f"""
+    # Distinct token-bigram shingle sets ``docs(doc_id, sh)``: the
+    # shared base of the Jaccard/MinHash oracles.
+    shingle_docs = f"""
             WITH toks AS (
                 SELECT doc_id, {tokens} AS tokens FROM documents),
             docs AS (
@@ -6294,7 +5972,8 @@ def oracle_sql() -> dict[str, str]:
                        list_distinct([array_to_string(tokens[i:i+2], ' ')
                            for i in generate_series(
                                1, greatest(len(tokens)-3, 0)+1)]) AS sh
-                FROM toks),
+                FROM toks)"""
+    exact_jaccard_pairs = f"""{shingle_docs},
             pairs AS (
                 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                        cast(len(list_intersect(a.sh, b.sh)) AS double)
@@ -6415,15 +6094,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY t.doc_id
         """
 
-    ngram_pairs = f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            docs AS (
-                SELECT doc_id,
-                       list_distinct([array_to_string(tokens[i:i+2], ' ')
-                           for i in generate_series(
-                               1, greatest(len(tokens)-3, 0)+1)]) AS sh
-                FROM toks),
+    ngram_pairs = f"""{shingle_docs},
             pref AS (
                 SELECT doc_id,
                        (list_sort(list_transform(sh, s -> md5(s))))
@@ -6446,11 +6117,11 @@ def oracle_sql() -> dict[str, str]:
             JOIN docs db ON db.doc_id = id_b
             WHERE jaccard >= 0.5
     """
-    # Shared by duplicate_clusters (min-label propagation) and
-    # duplicate_clusters_star (large-star/small-star) — one contract,
-    # two engines, both must hash-match this recursive CTE.
-    duplicate_clusters_sql = f"""
-            WITH RECURSIVE pairs AS ({ngram_pairs}),
+    def cc_reach(pair_sql: str) -> str:
+        """Recursive-CTE reachability over the undirected (id_a, id_b)
+        edges of ``pair_sql``: ``reach(id, comp)`` for every doc."""
+        return f"""
+            WITH RECURSIVE pairs AS ({pair_sql}),
             edges AS (
                 SELECT id_a AS src, id_b AS dst FROM pairs
                 UNION ALL
@@ -6458,14 +6129,439 @@ def oracle_sql() -> dict[str, str]:
             reach(id, comp) AS (
                 SELECT doc_id, doc_id FROM documents
                 UNION
-                SELECT e.src, r.comp FROM edges e JOIN reach r ON e.dst = r.id)
+                SELECT e.src, r.comp FROM edges e JOIN reach r ON e.dst = r.id)"""
+
+    def components(pair_sql: str, name: str = "comps") -> str:
+        """``cc_reach`` plus ``name(doc_id, component)``, each doc
+        labelled with the min doc id of its connected component."""
+        return f"""{cc_reach(pair_sql)},
+            {name} AS (
+                SELECT id AS doc_id, min(comp) AS component
+                FROM reach GROUP BY id)"""
+
+    # Distinct 8-gram shingles per doc (``sh``) and the eval split's
+    # gram set (``ev``, doc_id % 10 = 7): contamination_report and
+    # decontaminated_docs.
+    eval_grams = f"""
+            WITH toks AS (
+                SELECT doc_id, {tokens} AS tokens FROM documents),
+            sh AS (
+                SELECT doc_id,
+                       list_distinct([array_to_string(tokens[i:i+7], ' ')
+                           for i in generate_series(
+                               1, greatest(len(tokens)-8, 0)+1)]) AS sh
+                FROM toks),
+            ev AS (
+                SELECT DISTINCT unnest(sh) AS gram FROM sh
+                WHERE doc_id % 10 = 7),"""
+    # Train-doc 8-gram start positions ``hits(doc_id, i)`` that occur in
+    # the eval split: contamination_spans and remove_contaminated_spans.
+    eval_gram_hits = f"""
+            WITH toks AS (SELECT doc_id, {tokens} AS t FROM documents),
+            tr AS (SELECT * FROM toks WHERE doc_id % 10 != 7),
+            ev AS (SELECT * FROM toks WHERE doc_id % 10 = 7),
+            evg AS (
+                SELECT DISTINCT array_to_string(t[i:i+7], ' ') AS gram
+                FROM ev,
+                     LATERAL (SELECT unnest(generate_series(
+                         1, len(t) - 8 + 1)) AS i) u),
+            tg AS (
+                SELECT doc_id, i, array_to_string(t[i:i+7], ' ') AS gram
+                FROM tr,
+                     LATERAL (SELECT unnest(generate_series(
+                         1, len(t) - 8 + 1)) AS i) u),
+            hits AS (SELECT doc_id, i FROM tg JOIN evg USING (gram)),"""
+    # DSIR per-bucket micro-unit log importance ratio ``ratio(b, r)``
+    # over hashed uni+bigrams, target source src0: dsir_importance_weights
+    # and dsir_resample.
+    dsir_ratio = f"""
+            WITH toks AS (
+                SELECT doc_id, source, {tokens} AS t FROM documents),
+            uni AS (SELECT doc_id, source, unnest(t) AS g FROM toks),
+            bi AS (
+                SELECT doc_id, source,
+                       unnest([t[i] || ' ' || t[i+1]
+                               for i in generate_series(1, len(t)-1)]) AS g
+                FROM toks WHERE len(t) >= 2),
+            grams AS (
+                SELECT doc_id, source,
+                       ({md5_bucket}) % 2048 AS b
+                FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
+            q AS (SELECT b, count(*) AS qc FROM grams GROUP BY b),
+            p AS (SELECT b, count(*) AS pcnt FROM grams
+                  WHERE source = 'src0' GROUP BY b),
+            tot AS (SELECT
+                (SELECT count(*) FROM grams) AS n_raw,
+                (SELECT count(*) FROM grams WHERE source = 'src0') AS n_tgt),
+            ratio AS (
+                SELECT b, cast(floor(1000000.0 * (
+                           ln(coalesce(pcnt, 0) + 1.0)
+                           - ln(cast(n_tgt + 2048 AS double))
+                           - ln(qc + 1.0)
+                           + ln(cast(n_raw + 2048 AS double))))
+                       AS bigint) AS r
+                FROM q LEFT JOIN p USING (b), tot),"""
+    # Purchases and one view per (user, ts) — max event_id wins: the
+    # as-of join oracles.
+    asof_views = """
+            WITH purchases AS (
+                SELECT event_id, user_id, ts FROM events
+                WHERE event_type = 'purchase'),
+            views AS (
+                SELECT user_id, ts, max(event_id) AS view_event_id,
+                       max(value) AS view_value
+                FROM events WHERE event_type = 'view' GROUP BY user_id, ts)"""
+
+    def asof_pick(op: str) -> str:
+        return f"""{asof_views}
+            SELECT l.event_id, l.user_id, l.ts,
+                   r.view_event_id, round(r.view_value, 2) AS view_value
+            FROM purchases l
+            ASOF LEFT JOIN views r
+                ON l.user_id = r.user_id AND l.ts {op} r.ts
+        """
+
+    # Per-user daily event counts/cents over a gap-free day grid:
+    # resample_daily and rolling_activity.
+    daily_grid = """
+            WITH daily AS (
+                SELECT user_id, cast(ts AS date) AS day,
+                       count(*) AS n_events,
+                       cast(sum(cast(floor(value * 100 + 0.5) AS bigint))
+                            AS bigint) AS value_cents
+                FROM events GROUP BY 1, 2),
+            span AS (
+                SELECT user_id, min(day) AS d0, max(day) AS d1
+                FROM daily GROUP BY 1),
+            grid_ts AS (
+                SELECT user_id,
+                       unnest(generate_series(cast(d0 AS timestamp),
+                                              cast(d1 AS timestamp),
+                                              INTERVAL 1 DAY)) AS day_ts
+                FROM span),
+            grid AS (
+                SELECT user_id, cast(day_ts AS date) AS day FROM grid_ts)"""
+    grid_fill = """
+            SELECT g.user_id, g.day,
+                   coalesce(d.n_events, 0) AS n_events,
+                   coalesce(d.value_cents, 0) AS value_cents
+            FROM grid g LEFT JOIN daily d USING (user_id, day)"""
+    # The two corpus runs (old, new) of the corpus-versioning oracles.
+    corpus_runs = """
+            WITH old AS (SELECT doc_id, source, text FROM documents),
+            new AS (
+                SELECT doc_id,
+                       CASE WHEN doc_id % 23 = 0 THEN 'remix'
+                            ELSE source END AS source,
+                       CASE WHEN doc_id % 13 = 0 THEN text || ' [r2]'
+                            ELSE text END AS text
+                FROM documents WHERE doc_id % 17 <> 0
+                UNION ALL
+                SELECT doc_id + 10000000, 'synthetic', text
+                FROM documents WHERE doc_id % 19 = 0)"""
+    # Per-doc merge of overlapping ``iv(doc_id, s, e)`` intervals into
+    # spans: contamination_spans and exact_substring_spans.
+    merged_spans = """
+            m AS (
+                SELECT doc_id, s, e,
+                       max(e) OVER (PARTITION BY doc_id ORDER BY s, e
+                           ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND 1 PRECEDING) AS pme
+                FROM iv),
+            isl AS (
+                SELECT doc_id, s, e,
+                       sum(CASE WHEN pme IS NULL OR s > pme
+                           THEN 1 ELSE 0 END)
+                           OVER (PARTITION BY doc_id ORDER BY s, e)
+                           AS island
+                FROM m)
+            SELECT doc_id,
+                   cast(min(s) AS bigint) AS span_start,
+                   cast(max(e) AS bigint) AS span_end,
+                   cast(max(e) - min(s) AS bigint) AS span_len
+            FROM isl GROUP BY doc_id, island"""
+    # Scheme, host, port and path of the crawl URL planted on each doc
+    # (domain_mix adds query and fragment; domain_blocklist does not).
+    planted_url = """(CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://'
+                             ELSE 'http://' END)
+                       || (['www.Example.COM','docs.example.com',
+                            'News.Site.org','cdn.assets.net'])
+                          [cast(doc_id % 4 AS int) + 1]
+                       || (CASE WHEN doc_id % 5 = 0 THEN
+                             CASE WHEN doc_id % 3 = 0 THEN ':443'
+                                  ELSE ':80' END
+                           ELSE '' END)
+                       || '/p/' || cast(doc_id % 40 AS varchar)
+                       || (CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END)"""
+    # Documents re-lined into 6-token lines with a German line on
+    # doc_id % 4 and a French line on % 6: line_language_mix and
+    # language_split.
+    multilingual_pages = """
+            WITH synth AS (
+                SELECT doc_id,
+                    (CASE WHEN doc_id % 4 = 0
+                        THEN 'der hund ist nicht da und ich' || chr(10)
+                        ELSE '' END)
+                    || array_to_string(
+                        [array_to_string(l[(i*6+1):(i*6+6)], ' ')
+                         for i in generate_series(0, (len(l) - 1) // 6)],
+                        chr(10))
+                    || (CASE WHEN doc_id % 6 = 0
+                        THEN chr(10) || 'le chat est dans la maison pour'
+                        ELSE '' END) AS text
+                FROM (SELECT doc_id, string_split(text, ' ') AS l
+                      FROM documents))"""
+    # Per-doc token count, distinct count and bigram list:
+    # curation_funnel and repetition_signals.
+    token_bigrams = f"""
+            WITH t AS (SELECT doc_id, {tokens} AS toks FROM documents),
+            b AS (
+                SELECT doc_id, toks, len(toks) AS n,
+                       len(list_distinct(toks)) AS nd,
+                       [array_to_string(toks[i:i+1], ' ')
+                           for i in generate_series(
+                               1, greatest(len(toks)-2, 0)+1)] AS big
+                FROM t)"""
+    # Per-doc 64-bit md5 prefixes of the token-bigram shingles:
+    # fingerprint_overlap_pairs and winnowing_fingerprints.
+    shingle_hashes = f"""
+            WITH toks AS (
+                SELECT doc_id, {tokens} AS tokens FROM documents),
+            hashes AS (
+                SELECT doc_id,
+                       list_transform(
+                           [array_to_string(tokens[i:i+2], ' ')
+                            for i in generate_series(
+                                1, greatest(len(tokens)-3, 0)+1)],
+                           g -> md5(g)[1:16]) AS h
+                FROM toks)"""
+    # Exact top-10 cosine kNN of the vec_id < 5 queries over the rest.
+    knn_exact = f"""
+            SELECT query_id, neighbor_id, rank, cosine FROM (
+                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                       round({cos}, 4) AS cosine,
+                       row_number() OVER (
+                           PARTITION BY q.vec_id
+                           ORDER BY round({cos}, 4) DESC, c.vec_id ASC) AS rank
+                FROM embeddings q, embeddings c
+                WHERE q.vec_id < 5 AND c.vec_id >= 5)
+            WHERE rank <= 10
+        """
+
+    def lloyd_c2(a: str) -> str:
+        """Lowest-8-id init plus two _lloyd_iter iterations over ``e``
+        (assignment CTEs ``{a}1``, ``{a}2``), ending at centroids c2."""
+        return f"""
+            dims AS (
+                SELECT vec_id, generate_subscripts(v, 1) AS d,
+                       unnest(v) AS val
+                FROM e),
+            c0 AS (
+                SELECT cast(row_number() OVER (ORDER BY vec_id) - 1
+                            AS int) AS cid, v
+                FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
+            {_lloyd_iter('c0', a + '1', 'c1')},
+            {_lloyd_iter('c1', a + '2', 'c2')}"""
+
+    # each ``e`` vector's c2 centroid (round-6 cosine, ties to lower cid)
+    assign_c2 = """
+                SELECT vec_id, cid FROM (
+                    SELECT e.vec_id, c.cid,
+                           row_number() OVER (
+                               PARTITION BY e.vec_id
+                               ORDER BY round(list_dot_product(e.v, c.v)
+                                   / (sqrt(list_dot_product(e.v, e.v))
+                                      * sqrt(list_dot_product(c.v, c.v))),
+                                   6) DESC,
+                                   c.cid ASC) AS rn
+                    FROM e CROSS JOIN c2 c)
+                WHERE rn = 1"""
+
+    def ivf_probes(a: str) -> str:
+        """IVF over the vec_id >= 5 corpus ``e`` (``lloyd_c2(a)`` lists,
+        ``assign``) and each vec_id < 5 query's 2 nearest lists."""
+        return f"""
+            WITH eall AS (
+                SELECT vec_id,
+                       list_transform(embedding, x -> x::DOUBLE) AS v
+                FROM embeddings),
+            e AS (SELECT vec_id, v FROM eall WHERE vec_id >= 5),
+            qs AS (SELECT vec_id, v FROM eall WHERE vec_id < 5),
+            {lloyd_c2(a)},
+            assign AS ({assign_c2}),
+            probes AS (
+                SELECT query_id, cid FROM (
+                    SELECT q.vec_id AS query_id, c.cid,
+                           row_number() OVER (
+                               PARTITION BY q.vec_id
+                               ORDER BY round(list_dot_product(q.v, c.v)
+                                   / (sqrt(list_dot_product(q.v, q.v))
+                                      * sqrt(list_dot_product(c.v, c.v))),
+                                   6) DESC,
+                                   c.cid DESC) AS rn
+                    FROM qs q CROSS JOIN c2 c)
+                WHERE rn <= 2)"""
+
+    # recall_bp of an ``approx(query_id, neighbor_id)`` CTE against the
+    # round-4 exact top-10 of ``qs`` over ``e``
+    recall_vs_exact = """
+            exact AS (
+                SELECT query_id, neighbor_id FROM (
+                    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                           row_number() OVER (
+                               PARTITION BY q.vec_id
+                               ORDER BY round(list_dot_product(c.v, q.v)
+                                   / (sqrt(list_dot_product(c.v, c.v))
+                                      * sqrt(list_dot_product(q.v, q.v))),
+                                   4) DESC,
+                                   c.vec_id ASC) AS rn
+                    FROM qs q CROSS JOIN e c)
+                WHERE rn <= 10),
+            hits AS (
+                SELECT ex.query_id, ex.neighbor_id,
+                       CASE WHEN ap.neighbor_id IS NOT NULL
+                            THEN 1 ELSE 0 END AS hit
+                FROM exact ex
+                LEFT JOIN approx ap
+                    ON ap.query_id = ex.query_id
+                       AND ap.neighbor_id = ex.neighbor_id)
+            SELECT query_id,
+                   cast(count(*) AS bigint) AS n_exact,
+                   cast(sum(hit) AS bigint) AS n_hits,
+                   cast(sum(hit) * 10000 // count(*) AS bigint)
+                       AS recall_bp
+            FROM hits GROUP BY 1"""
+    # Shared by duplicate_clusters (min-label propagation) and
+    # duplicate_clusters_star (large-star/small-star) — one contract,
+    # two engines, both must hash-match this recursive CTE.
+    duplicate_clusters_sql = f"""{cc_reach(ngram_pairs)}
             SELECT id AS doc_id, min(comp) AS component
             FROM reach GROUP BY id
         """
-    # Shared by rest_ingest_videos (transport-seam connector) and
-    # python_datasource_videos (Spark 4 Python Data Source) — both must
-    # land byte-identical silver rows.
-    videos_silver_sql = """
+    # BM25 (k1=1.2, b=0.75) over documents for the doc_id % 101 = 0
+    # queries, as micro-unit per-term contributions: shared by
+    # bm25_search, bm25_search_pruned (which joins a pruned term
+    # dictionary), hybrid_retrieval_rrf and retrieval_quality.
+    bm25_ctes = f"""
+            WITH toks AS (SELECT doc_id, {tokens} AS t FROM documents),
+            postings AS (
+                SELECT doc_id, x AS term, cast(count(*) AS bigint) AS tf
+                FROM (SELECT doc_id, unnest(t) AS x FROM toks)
+                GROUP BY doc_id, x),
+            dl AS (
+                SELECT doc_id, sum(tf) AS dl
+                FROM postings GROUP BY doc_id),
+            stats AS (
+                SELECT cast(count(*) AS bigint) AS n_docs,
+                       cast(sum(dl) AS bigint) AS sum_dl
+                FROM dl),
+            dft AS (
+                SELECT term, cast(count(*) AS bigint) AS df
+                FROM postings GROUP BY term),"""
+    bm25_terms = """
+                JOIN postings p USING (term)
+                JOIN dft f USING (term)"""
+    bm25_terms_kept = """
+                JOIN dft_kept f USING (term)
+                JOIN postings p USING (term)"""
+
+    def bm25_contrib(term_joins: str) -> str:
+        return f"""
+            qterms AS (
+                SELECT DISTINCT doc_id AS query_id, x AS term
+                FROM (SELECT doc_id, unnest(t) AS x
+                      FROM toks WHERE doc_id % 101 = 0)),
+            contrib AS (
+                SELECT q.query_id, p.doc_id,
+                       cast(floor(1000000.0 * (
+                           ln(1.0 + (s.n_docs - f.df + 0.5)
+                                    / (f.df + 0.5))
+                           * ((p.tf * (1.2 + 1.0))
+                              / (p.tf + 1.2 * ((1.0 - 0.75)
+                                 + 0.75 * (l.dl
+                                     / (cast(s.sum_dl AS double)
+                                        / cast(s.n_docs AS double))))))
+                       )) AS bigint) AS c_micro
+                FROM qterms q
+                {term_joins}
+                JOIN dl l ON l.doc_id = p.doc_id
+                CROSS JOIN stats s),"""
+
+    bm25_top10 = """
+            scores AS (
+                SELECT query_id, doc_id,
+                       cast(sum(c_micro) AS bigint) AS score_micro
+                FROM contrib GROUP BY query_id, doc_id),
+            ranked AS (
+                SELECT query_id, doc_id, score_micro,
+                       cast(row_number() OVER (
+                           PARTITION BY query_id
+                           ORDER BY score_micro DESC, doc_id ASC
+                       ) AS bigint) AS rank
+                FROM scores)
+            SELECT query_id, rank, doc_id, score_micro
+            FROM ranked WHERE rank <= 10
+        """
+    # BM25@20 and dense cosine@20 with their integer-reciprocal RRF
+    # terms (hybrid_retrieval_rrf, retrieval_quality).
+    hybrid_rrf_ctes = f"""
+            lex AS (
+                SELECT query_id, doc_id,
+                       row_number() OVER (
+                           PARTITION BY query_id
+                           ORDER BY sum(c_micro) DESC, doc_id ASC
+                       ) AS rank
+                FROM contrib GROUP BY query_id, doc_id),
+            dense AS (
+                SELECT query_id, doc_id, rank FROM (
+                    SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
+                           row_number() OVER (
+                               PARTITION BY q.vec_id
+                               ORDER BY round({cos}, 4) DESC,
+                                        c.vec_id ASC) AS rank
+                    FROM embeddings q, embeddings c
+                    WHERE q.vec_id % 101 = 0)
+                WHERE rank <= 20),
+            unioned AS (
+                SELECT query_id, doc_id, 1000000 // (60 + rank) AS rr
+                FROM lex WHERE rank <= 20
+                UNION ALL
+                SELECT query_id, doc_id, 1000000 // (60 + rank) AS rr
+                FROM dense),"""
+    # Paragraphs (3-token chunks) exploded with their integer
+    # occurrence key doc_id * 1e6 + position, and the ordered rebuild of
+    # each doc from its ``kept`` paragraphs: the paragraph_* oracles.
+    para_ex = f"""
+            WITH toks AS (
+                SELECT doc_id, {tokens} AS tokens FROM documents),
+            docs AS (
+                SELECT doc_id,
+                       [array_to_string(tokens[3*i+1 : 3*i+3], ' ')
+                        for i in generate_series(
+                            0, cast(floor((len(tokens)-1) / 3.0)
+                                    AS bigint))] AS paras
+                FROM toks),
+            ex AS (
+                SELECT doc_id, generate_subscripts(paras, 1) AS pos,
+                       unnest(paras) AS para,
+                       doc_id * 1000000
+                           + generate_subscripts(paras, 1) - 1 AS k
+                FROM docs)"""
+    para_kept_text = """
+            reb AS (
+                SELECT doc_id, list(para ORDER BY pos) AS kparas,
+                       count(*) AS nk
+                FROM kept GROUP BY 1)
+            SELECT d.doc_id,
+                   coalesce(array_to_string(r.kparas, ' | '), '')
+                       AS kept_text,
+                   cast(len(d.paras) AS bigint) AS n_paras,
+                   cast(len(d.paras) - coalesce(r.nk, 0) AS bigint)
+                       AS n_paras_removed
+            FROM docs d LEFT JOIN reb r USING (doc_id)"""
+    # Silver rows of the orders-derived videos: videos_bronze_to_silver
+    # (all orders) and videos_silver_sql (the first 500).
+    videos_silver_all = """
             SELECT 'vid' || o_orderkey AS video_id,
                    o_orderpriority || ' order ' || o_orderkey AS title,
                    cast(strftime(o_orderdate, '%Y-%m-%d %H:%M:%S')
@@ -6482,6 +6578,11 @@ def oracle_sql() -> dict[str, str]:
                         ELSE o_orderkey % 1000 END AS like_count,
                    o_custkey % 100 AS comment_count
             FROM orders
+        """
+    # Shared by rest_ingest_videos (transport-seam connector) and
+    # python_datasource_videos (Spark 4 Python Data Source) — both must
+    # land byte-identical silver rows.
+    videos_silver_sql = f"""{videos_silver_all}
             WHERE o_orderkey IN (
                 SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 500)
         """
@@ -6583,24 +6684,7 @@ def oracle_sql() -> dict[str, str]:
                    cast(NULL AS varchar) AS error
             FROM documents
         """,
-        "videos_bronze_to_silver": """
-            SELECT 'vid' || o_orderkey AS video_id,
-                   o_orderpriority || ' order ' || o_orderkey AS title,
-                   cast(strftime(o_orderdate, '%Y-%m-%d %H:%M:%S')
-                        AS timestamp) AS published_at,
-                   'chan' || (o_custkey % 10) AS channel_title,
-                   'PT' || (o_orderkey % 60) || 'M' || (o_custkey % 60) || 'S'
-                       AS duration,
-                   (o_orderkey % 60) * 60 + (o_custkey % 60)
-                       AS duration_seconds,
-                   CASE WHEN o_orderkey % 97 = 0 THEN NULL
-                        ELSE cast(floor(o_totalprice) AS bigint) END
-                       AS view_count,
-                   CASE WHEN o_orderkey % 5 = 0 THEN NULL
-                        ELSE o_orderkey % 1000 END AS like_count,
-                   o_custkey % 100 AS comment_count
-            FROM orders
-        """,
+        "videos_bronze_to_silver": videos_silver_all,
         "comments_bronze_to_silver": """
             WITH b AS (
                 SELECT 'vid' || (doc_id % 100) AS videoId,
@@ -6712,20 +6796,7 @@ def oracle_sql() -> dict[str, str]:
             WHERE c_nationkey = s_nationkey AND r_name = 'ASIA'
             GROUP BY n_name
         """,
-        "asof_join": """
-            WITH purchases AS (
-                SELECT event_id, user_id, ts FROM events
-                WHERE event_type = 'purchase'),
-            views AS (
-                SELECT user_id, ts, max(event_id) AS view_event_id,
-                       max(value) AS view_value
-                FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-            SELECT l.event_id, l.user_id, l.ts,
-                   r.view_event_id, round(r.view_value, 2) AS view_value
-            FROM purchases l
-            ASOF LEFT JOIN views r
-                ON l.user_id = r.user_id AND l.ts >= r.ts
-        """,
+        "asof_join": asof_pick(">="),
         "range_join_bands": """
             WITH bands(band, lo, hi) AS (VALUES
                 ('band_0_50k', 0.0, 50000.0),
@@ -7413,52 +7484,10 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL SELECT 1, 'click', c1 FROM reached
             UNION ALL SELECT 2, 'purchase', c2 FROM reached
         """,
-        "resample_daily": """
-            WITH daily AS (
-                SELECT user_id, cast(ts AS date) AS day,
-                       count(*) AS n_events,
-                       cast(sum(cast(floor(value * 100 + 0.5) AS bigint))
-                            AS bigint) AS value_cents
-                FROM events GROUP BY 1, 2),
-            span AS (
-                SELECT user_id, min(day) AS d0, max(day) AS d1
-                FROM daily GROUP BY 1),
-            grid_ts AS (
-                SELECT user_id,
-                       unnest(generate_series(cast(d0 AS timestamp),
-                                              cast(d1 AS timestamp),
-                                              INTERVAL 1 DAY)) AS day_ts
-                FROM span),
-            grid AS (
-                SELECT user_id, cast(day_ts AS date) AS day FROM grid_ts)
-            SELECT g.user_id, g.day,
-                   coalesce(d.n_events, 0) AS n_events,
-                   coalesce(d.value_cents, 0) AS value_cents
-            FROM grid g LEFT JOIN daily d USING (user_id, day)
+        "resample_daily": f"""{daily_grid}{grid_fill}
         """,
-        "rolling_activity": """
-            WITH daily AS (
-                SELECT user_id, cast(ts AS date) AS day,
-                       count(*) AS n_events,
-                       cast(sum(cast(floor(value * 100 + 0.5) AS bigint))
-                            AS bigint) AS value_cents
-                FROM events GROUP BY 1, 2),
-            span AS (
-                SELECT user_id, min(day) AS d0, max(day) AS d1
-                FROM daily GROUP BY 1),
-            grid_ts AS (
-                SELECT user_id,
-                       unnest(generate_series(cast(d0 AS timestamp),
-                                              cast(d1 AS timestamp),
-                                              INTERVAL 1 DAY)) AS day_ts
-                FROM span),
-            grid AS (
-                SELECT user_id, cast(day_ts AS date) AS day FROM grid_ts),
-            dense AS (
-                SELECT g.user_id, g.day,
-                       coalesce(d.n_events, 0) AS n_events,
-                       coalesce(d.value_cents, 0) AS value_cents
-                FROM grid g LEFT JOIN daily d USING (user_id, day))
+        "rolling_activity": f"""{daily_grid},
+            dense AS ({grid_fill})
             SELECT user_id, day, n_events,
                    cast(sum(n_events) OVER w AS bigint) AS n_events_7d,
                    cast(sum(value_cents) OVER w AS bigint) AS cents_7d
@@ -7712,18 +7741,7 @@ def oracle_sql() -> dict[str, str]:
                    min(doc_id) AS doc_id, count(*) AS n_docs
             FROM documents GROUP BY 1
         """,
-        "contamination_report": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            sh AS (
-                SELECT doc_id,
-                       list_distinct([array_to_string(tokens[i:i+7], ' ')
-                           for i in generate_series(
-                               1, greatest(len(tokens)-8, 0)+1)]) AS sh
-                FROM toks),
-            ev AS (
-                SELECT DISTINCT unnest(sh) AS gram FROM sh
-                WHERE doc_id % 10 = 7),
+        "contamination_report": f"""{eval_grams}
             corp AS (
                 SELECT doc_id, len(sh) AS n_grams, unnest(sh) AS gram
                 FROM sh WHERE doc_id % 10 <> 7)
@@ -7734,18 +7752,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY doc_id, n_grams
         """,
         # drop-side twin: same gram CTEs, survivors via NOT EXISTS
-        "decontaminated_docs": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            sh AS (
-                SELECT doc_id,
-                       list_distinct([array_to_string(tokens[i:i+7], ' ')
-                           for i in generate_series(
-                               1, greatest(len(tokens)-8, 0)+1)]) AS sh
-                FROM toks),
-            ev AS (
-                SELECT DISTINCT unnest(sh) AS gram FROM sh
-                WHERE doc_id % 10 = 7),
+        "decontaminated_docs": f"""{eval_grams}
             corp AS (
                 SELECT doc_id, unnest(sh) AS gram
                 FROM sh WHERE doc_id % 10 <> 7),
@@ -7816,15 +7823,7 @@ def oracle_sql() -> dict[str, str]:
                         AS bigint) AS near_bp
             FROM g
         """,
-        "curation_funnel": f"""
-            WITH t AS (SELECT doc_id, {tokens} AS toks FROM documents),
-            b AS (
-                SELECT doc_id, toks, len(toks) AS n,
-                       len(list_distinct(toks)) AS nd,
-                       [array_to_string(toks[i:i+1], ' ')
-                           for i in generate_series(
-                               1, greatest(len(toks)-2, 0)+1)] AS big
-                FROM t),
+        "curation_funnel": f"""{token_bigrams},
             s AS (
                 SELECT doc_id,
                        ((n - nd) * 1000 // greatest(n, 1) > 500)
@@ -7867,15 +7866,7 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL SELECT 'repetition', repetition FROM counts
             UNION ALL SELECT 'dedup', dedup FROM kept
         """,
-        "repetition_signals": f"""
-            WITH t AS (SELECT doc_id, {tokens} AS toks FROM documents),
-            b AS (
-                SELECT doc_id, toks, len(toks) AS n,
-                       len(list_distinct(toks)) AS nd,
-                       [array_to_string(toks[i:i+1], ' ')
-                           for i in generate_series(
-                               1, greatest(len(toks)-2, 0)+1)] AS big
-                FROM t),
+        "repetition_signals": f"""{token_bigrams},
             s AS (
                 SELECT doc_id, n,
                        (n - nd) * 1000 // greatest(n, 1) AS dup_word_milli,
@@ -8024,59 +8015,14 @@ def oracle_sql() -> dict[str, str]:
         # contamination spans: train-gram ∩ eval-gram position cover +
         # per-doc interval merge — by construction the same positions
         # the engine's union-corpus suffix ranks mark
-        "contamination_spans": f"""
-            WITH toks AS (SELECT doc_id, {tokens} AS t FROM documents),
-            tr AS (SELECT * FROM toks WHERE doc_id % 10 != 7),
-            ev AS (SELECT * FROM toks WHERE doc_id % 10 = 7),
-            evg AS (
-                SELECT DISTINCT array_to_string(t[i:i+7], ' ') AS gram
-                FROM ev,
-                     LATERAL (SELECT unnest(generate_series(
-                         1, len(t) - 8 + 1)) AS i) u),
-            tg AS (
-                SELECT doc_id, i, array_to_string(t[i:i+7], ' ') AS gram
-                FROM tr,
-                     LATERAL (SELECT unnest(generate_series(
-                         1, len(t) - 8 + 1)) AS i) u),
-            hits AS (SELECT doc_id, i FROM tg JOIN evg USING (gram)),
+        "contamination_spans": f"""{eval_gram_hits}
             iv AS (SELECT doc_id, i - 1 AS s, i + 7 AS e FROM hits),
-            m AS (
-                SELECT doc_id, s, e,
-                       max(e) OVER (PARTITION BY doc_id ORDER BY s, e
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND 1 PRECEDING) AS pme
-                FROM iv),
-            isl AS (
-                SELECT doc_id, s, e,
-                       sum(CASE WHEN pme IS NULL OR s > pme
-                           THEN 1 ELSE 0 END)
-                           OVER (PARTITION BY doc_id ORDER BY s, e)
-                           AS island
-                FROM m)
-            SELECT doc_id,
-                   cast(min(s) AS bigint) AS span_start,
-                   cast(max(e) AS bigint) AS span_end,
-                   cast(max(e) - min(s) AS bigint) AS span_len
-            FROM isl GROUP BY doc_id, island
+            {merged_spans}
         """,
         # decontamination rewrite: spans (gram formulation) + rebuild
         # from non-covered positions; string_agg over zero kept tokens
         # is NULL -> coalesce to '' (Spark concat_ws gives '')
-        "remove_contaminated_spans": f"""
-            WITH toks AS (SELECT doc_id, {tokens} AS t FROM documents),
-            tr AS (SELECT * FROM toks WHERE doc_id % 10 != 7),
-            ev AS (SELECT * FROM toks WHERE doc_id % 10 = 7),
-            evg AS (
-                SELECT DISTINCT array_to_string(t[i:i+7], ' ') AS gram
-                FROM ev,
-                     LATERAL (SELECT unnest(generate_series(
-                         1, len(t) - 8 + 1)) AS i) u),
-            tg AS (
-                SELECT doc_id, i, array_to_string(t[i:i+7], ' ') AS gram
-                FROM tr,
-                     LATERAL (SELECT unnest(generate_series(
-                         1, len(t) - 8 + 1)) AS i) u),
-            hits AS (SELECT doc_id, i FROM tg JOIN evg USING (gram)),
+        "remove_contaminated_spans": f"""{eval_gram_hits}
             cover AS (
                 SELECT DISTINCT h.doc_id, p.p
                 FROM hits h,
@@ -8165,176 +8111,22 @@ def oracle_sql() -> dict[str, str]:
         # written with the IDENTICAL literal composition ((1.2 + 1.0),
         # (1.0 - 0.75)) and op order on both engines, micro-floored
         # before the per-(query, doc) sum
-        "bm25_search": f"""
-            WITH toks AS (SELECT doc_id, {tokens} AS t FROM documents),
-            postings AS (
-                SELECT doc_id, x AS term, cast(count(*) AS bigint) AS tf
-                FROM (SELECT doc_id, unnest(t) AS x FROM toks)
-                GROUP BY doc_id, x),
-            dl AS (
-                SELECT doc_id, sum(tf) AS dl
-                FROM postings GROUP BY doc_id),
-            stats AS (
-                SELECT cast(count(*) AS bigint) AS n_docs,
-                       cast(sum(dl) AS bigint) AS sum_dl
-                FROM dl),
-            dft AS (
-                SELECT term, cast(count(*) AS bigint) AS df
-                FROM postings GROUP BY term),
-            qterms AS (
-                SELECT DISTINCT doc_id AS query_id, x AS term
-                FROM (SELECT doc_id, unnest(t) AS x
-                      FROM toks WHERE doc_id % 101 = 0)),
-            contrib AS (
-                SELECT q.query_id, p.doc_id,
-                       cast(floor(1000000.0 * (
-                           ln(1.0 + (s.n_docs - f.df + 0.5)
-                                    / (f.df + 0.5))
-                           * ((p.tf * (1.2 + 1.0))
-                              / (p.tf + 1.2 * ((1.0 - 0.75)
-                                 + 0.75 * (l.dl
-                                     / (cast(s.sum_dl AS double)
-                                        / cast(s.n_docs AS double))))))
-                       )) AS bigint) AS c_micro
-                FROM qterms q
-                JOIN postings p USING (term)
-                JOIN dft f USING (term)
-                JOIN dl l ON l.doc_id = p.doc_id
-                CROSS JOIN stats s),
-            scores AS (
-                SELECT query_id, doc_id,
-                       cast(sum(c_micro) AS bigint) AS score_micro
-                FROM contrib GROUP BY query_id, doc_id),
-            ranked AS (
-                SELECT query_id, doc_id, score_micro,
-                       cast(row_number() OVER (
-                           PARTITION BY query_id
-                           ORDER BY score_micro DESC, doc_id ASC
-                       ) AS bigint) AS rank
-                FROM scores)
-            SELECT query_id, rank, doc_id, score_micro
-            FROM ranked WHERE rank <= 10
-        """,
+        "bm25_search": f"""{bm25_ctes}{bm25_contrib(bm25_terms)}{bm25_top10}""",
         # bm25_search_pruned: the identical pipeline with the max_df
         # dial's integer predicate (df*1000 <= 775*N) applied to the
         # term dictionary before the candidate join — the dialed
         # contract itself is deterministic, so it hash-checks
-        "bm25_search_pruned": f"""
-            WITH toks AS (SELECT doc_id, {tokens} AS t FROM documents),
-            postings AS (
-                SELECT doc_id, x AS term, cast(count(*) AS bigint) AS tf
-                FROM (SELECT doc_id, unnest(t) AS x FROM toks)
-                GROUP BY doc_id, x),
-            dl AS (
-                SELECT doc_id, sum(tf) AS dl
-                FROM postings GROUP BY doc_id),
-            stats AS (
-                SELECT cast(count(*) AS bigint) AS n_docs,
-                       cast(sum(dl) AS bigint) AS sum_dl
-                FROM dl),
-            dft AS (
-                SELECT term, cast(count(*) AS bigint) AS df
-                FROM postings GROUP BY term),
+        "bm25_search_pruned": f"""{bm25_ctes}
             dft_kept AS (
                 SELECT f.term, f.df FROM dft f CROSS JOIN stats s
                 WHERE f.df * 1000 <= 775 * s.n_docs),
-            qterms AS (
-                SELECT DISTINCT doc_id AS query_id, x AS term
-                FROM (SELECT doc_id, unnest(t) AS x
-                      FROM toks WHERE doc_id % 101 = 0)),
-            contrib AS (
-                SELECT q.query_id, p.doc_id,
-                       cast(floor(1000000.0 * (
-                           ln(1.0 + (s.n_docs - f.df + 0.5)
-                                    / (f.df + 0.5))
-                           * ((p.tf * (1.2 + 1.0))
-                              / (p.tf + 1.2 * ((1.0 - 0.75)
-                                 + 0.75 * (l.dl
-                                     / (cast(s.sum_dl AS double)
-                                        / cast(s.n_docs AS double))))))
-                       )) AS bigint) AS c_micro
-                FROM qterms q
-                JOIN dft_kept f USING (term)
-                JOIN postings p USING (term)
-                JOIN dl l ON l.doc_id = p.doc_id
-                CROSS JOIN stats s),
-            scores AS (
-                SELECT query_id, doc_id,
-                       cast(sum(c_micro) AS bigint) AS score_micro
-                FROM contrib GROUP BY query_id, doc_id),
-            ranked AS (
-                SELECT query_id, doc_id, score_micro,
-                       cast(row_number() OVER (
-                           PARTITION BY query_id
-                           ORDER BY score_micro DESC, doc_id ASC
-                       ) AS bigint) AS rank
-                FROM scores)
-            SELECT query_id, rank, doc_id, score_micro
-            FROM ranked WHERE rank <= 10
-        """,
+            {bm25_contrib(bm25_terms_kept)}{bm25_top10}""",
         # hybrid RRF: the bm25_search CTE pipeline at depth 20, the
         # knn_bruteforce cosine ranking (same round-4dp + id tie-break
         # as the established knn oracle) at depth 20, fused with
         # integer reciprocals 1000000 // (60 + rank)
-        "hybrid_retrieval_rrf": f"""
-            WITH toks AS (SELECT doc_id, {tokens} AS t FROM documents),
-            postings AS (
-                SELECT doc_id, x AS term, cast(count(*) AS bigint) AS tf
-                FROM (SELECT doc_id, unnest(t) AS x FROM toks)
-                GROUP BY doc_id, x),
-            dl AS (
-                SELECT doc_id, sum(tf) AS dl
-                FROM postings GROUP BY doc_id),
-            stats AS (
-                SELECT cast(count(*) AS bigint) AS n_docs,
-                       cast(sum(dl) AS bigint) AS sum_dl
-                FROM dl),
-            dft AS (
-                SELECT term, cast(count(*) AS bigint) AS df
-                FROM postings GROUP BY term),
-            qterms AS (
-                SELECT DISTINCT doc_id AS query_id, x AS term
-                FROM (SELECT doc_id, unnest(t) AS x
-                      FROM toks WHERE doc_id % 101 = 0)),
-            contrib AS (
-                SELECT q.query_id, p.doc_id,
-                       cast(floor(1000000.0 * (
-                           ln(1.0 + (s.n_docs - f.df + 0.5)
-                                    / (f.df + 0.5))
-                           * ((p.tf * (1.2 + 1.0))
-                              / (p.tf + 1.2 * ((1.0 - 0.75)
-                                 + 0.75 * (l.dl
-                                     / (cast(s.sum_dl AS double)
-                                        / cast(s.n_docs AS double))))))
-                       )) AS bigint) AS c_micro
-                FROM qterms q
-                JOIN postings p USING (term)
-                JOIN dft f USING (term)
-                JOIN dl l ON l.doc_id = p.doc_id
-                CROSS JOIN stats s),
-            lex AS (
-                SELECT query_id, doc_id,
-                       row_number() OVER (
-                           PARTITION BY query_id
-                           ORDER BY sum(c_micro) DESC, doc_id ASC
-                       ) AS rank
-                FROM contrib GROUP BY query_id, doc_id),
-            dense AS (
-                SELECT query_id, doc_id, rank FROM (
-                    SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
-                           row_number() OVER (
-                               PARTITION BY q.vec_id
-                               ORDER BY round({cos}, 4) DESC,
-                                        c.vec_id ASC) AS rank
-                    FROM embeddings q, embeddings c
-                    WHERE q.vec_id % 101 = 0)
-                WHERE rank <= 20),
-            unioned AS (
-                SELECT query_id, doc_id, 1000000 // (60 + rank) AS rr
-                FROM lex WHERE rank <= 20
-                UNION ALL
-                SELECT query_id, doc_id, 1000000 // (60 + rank) AS rr
-                FROM dense),
+        "hybrid_retrieval_rrf": f"""{bm25_ctes}{bm25_contrib(bm25_terms)}
+            {hybrid_rrf_ctes}
             fused AS (
                 SELECT query_id, doc_id,
                        cast(sum(rr) AS bigint) AS rrf_micro,
@@ -8354,65 +8146,8 @@ def oracle_sql() -> dict[str, str]:
         # cosine@20 + integer-reciprocal RRF) extended with the
         # truth/hit metric layer — recall in basis points via integer
         # div, MRR via the same 1000000 // rank quantization
-        "retrieval_quality": f"""
-            WITH toks AS (SELECT doc_id, {tokens} AS t FROM documents),
-            postings AS (
-                SELECT doc_id, x AS term, cast(count(*) AS bigint) AS tf
-                FROM (SELECT doc_id, unnest(t) AS x FROM toks)
-                GROUP BY doc_id, x),
-            dl AS (
-                SELECT doc_id, sum(tf) AS dl
-                FROM postings GROUP BY doc_id),
-            stats AS (
-                SELECT cast(count(*) AS bigint) AS n_docs,
-                       cast(sum(dl) AS bigint) AS sum_dl
-                FROM dl),
-            dft AS (
-                SELECT term, cast(count(*) AS bigint) AS df
-                FROM postings GROUP BY term),
-            qterms AS (
-                SELECT DISTINCT doc_id AS query_id, x AS term
-                FROM (SELECT doc_id, unnest(t) AS x
-                      FROM toks WHERE doc_id % 101 = 0)),
-            contrib AS (
-                SELECT q.query_id, p.doc_id,
-                       cast(floor(1000000.0 * (
-                           ln(1.0 + (s.n_docs - f.df + 0.5)
-                                    / (f.df + 0.5))
-                           * ((p.tf * (1.2 + 1.0))
-                              / (p.tf + 1.2 * ((1.0 - 0.75)
-                                 + 0.75 * (l.dl
-                                     / (cast(s.sum_dl AS double)
-                                        / cast(s.n_docs AS double))))))
-                       )) AS bigint) AS c_micro
-                FROM qterms q
-                JOIN postings p USING (term)
-                JOIN dft f USING (term)
-                JOIN dl l ON l.doc_id = p.doc_id
-                CROSS JOIN stats s),
-            lex AS (
-                SELECT query_id, doc_id,
-                       row_number() OVER (
-                           PARTITION BY query_id
-                           ORDER BY sum(c_micro) DESC, doc_id ASC
-                       ) AS rank
-                FROM contrib GROUP BY query_id, doc_id),
-            dense AS (
-                SELECT query_id, doc_id, rank FROM (
-                    SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
-                           row_number() OVER (
-                               PARTITION BY q.vec_id
-                               ORDER BY round({cos}, 4) DESC,
-                                        c.vec_id ASC) AS rank
-                    FROM embeddings q, embeddings c
-                    WHERE q.vec_id % 101 = 0)
-                WHERE rank <= 20),
-            unioned AS (
-                SELECT query_id, doc_id, 1000000 // (60 + rank) AS rr
-                FROM lex WHERE rank <= 20
-                UNION ALL
-                SELECT query_id, doc_id, 1000000 // (60 + rank) AS rr
-                FROM dense),
+        "retrieval_quality": f"""{bm25_ctes}{bm25_contrib(bm25_terms)}
+            {hybrid_rrf_ctes}
             fused AS (
                 SELECT query_id, doc_id,
                        cast(sum(rr) AS bigint) AS rrf_micro
@@ -8465,33 +8200,7 @@ def oracle_sql() -> dict[str, str]:
         # smoothed log-ratio composition (ln(p+1)-ln(T+B)-ln(q+1)
         # +ln(N+B)), floor-quantized to micro-units per BUCKET before
         # the per-doc integer sum — the only floats are ~2048 ln calls
-        "dsir_importance_weights": f"""
-            WITH toks AS (
-                SELECT doc_id, source, {tokens} AS t FROM documents),
-            uni AS (SELECT doc_id, source, unnest(t) AS g FROM toks),
-            bi AS (
-                SELECT doc_id, source,
-                       unnest([t[i] || ' ' || t[i+1]
-                               for i in generate_series(1, len(t)-1)]) AS g
-                FROM toks WHERE len(t) >= 2),
-            grams AS (
-                SELECT doc_id, source,
-                       ({md5_bucket}) % 2048 AS b
-                FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
-            q AS (SELECT b, count(*) AS qc FROM grams GROUP BY b),
-            p AS (SELECT b, count(*) AS pcnt FROM grams
-                  WHERE source = 'src0' GROUP BY b),
-            tot AS (SELECT
-                (SELECT count(*) FROM grams) AS n_raw,
-                (SELECT count(*) FROM grams WHERE source = 'src0') AS n_tgt),
-            ratio AS (
-                SELECT b, cast(floor(1000000.0 * (
-                           ln(coalesce(pcnt, 0) + 1.0)
-                           - ln(cast(n_tgt + 2048 AS double))
-                           - ln(qc + 1.0)
-                           + ln(cast(n_raw + 2048 AS double))))
-                       AS bigint) AS r
-                FROM q LEFT JOIN p USING (b), tot),
+        "dsir_importance_weights": f"""{dsir_ratio}
             scored AS (
                 SELECT doc_id, cast(count(*) AS bigint) AS n_grams,
                        cast(sum(r) AS bigint) AS logw_micro
@@ -8501,33 +8210,7 @@ def oracle_sql() -> dict[str, str]:
                    coalesce(s.logw_micro, 0) AS logw_micro
             FROM documents d LEFT JOIN scored s USING (doc_id)
         """,
-        "dsir_resample": f"""
-            WITH toks AS (
-                SELECT doc_id, source, {tokens} AS t FROM documents),
-            uni AS (SELECT doc_id, source, unnest(t) AS g FROM toks),
-            bi AS (
-                SELECT doc_id, source,
-                       unnest([t[i] || ' ' || t[i+1]
-                               for i in generate_series(1, len(t)-1)]) AS g
-                FROM toks WHERE len(t) >= 2),
-            grams AS (
-                SELECT doc_id, source,
-                       ({md5_bucket}) % 2048 AS b
-                FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
-            q AS (SELECT b, count(*) AS qc FROM grams GROUP BY b),
-            p AS (SELECT b, count(*) AS pcnt FROM grams
-                  WHERE source = 'src0' GROUP BY b),
-            tot AS (SELECT
-                (SELECT count(*) FROM grams) AS n_raw,
-                (SELECT count(*) FROM grams WHERE source = 'src0') AS n_tgt),
-            ratio AS (
-                SELECT b, cast(floor(1000000.0 * (
-                           ln(coalesce(pcnt, 0) + 1.0)
-                           - ln(cast(n_tgt + 2048 AS double))
-                           - ln(qc + 1.0)
-                           + ln(cast(n_raw + 2048 AS double))))
-                       AS bigint) AS r
-                FROM q LEFT JOIN p USING (b), tot),
+        "dsir_resample": f"""{dsir_ratio}
             scored AS (
                 SELECT doc_id, cast(sum(r) AS bigint) AS logw_micro
                 FROM grams JOIN ratio USING (b) GROUP BY doc_id),
@@ -8561,24 +8244,7 @@ def oracle_sql() -> dict[str, str]:
                            count(*) OVER (PARTITION BY gram) AS c
                     FROM g) WHERE c >= 2),
             iv AS (SELECT doc_id, i - 1 AS s, i + 7 AS e FROM rep),
-            m AS (
-                SELECT doc_id, s, e,
-                       max(e) OVER (PARTITION BY doc_id ORDER BY s, e
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND 1 PRECEDING) AS pme
-                FROM iv),
-            isl AS (
-                SELECT doc_id, s, e,
-                       sum(CASE WHEN pme IS NULL OR s > pme
-                           THEN 1 ELSE 0 END)
-                           OVER (PARTITION BY doc_id ORDER BY s, e)
-                           AS island
-                FROM m)
-            SELECT doc_id,
-                   cast(min(s) AS bigint) AS span_start,
-                   cast(max(e) AS bigint) AS span_end,
-                   cast(max(e) - min(s) AS bigint) AS span_len
-            FROM isl GROUP BY doc_id, island
+            {merged_spans}
         """,
         # suffix-array LCP repeats: dense_rank over truncated suffix
         # windows (lists order lexicographically, shorter-prefix first
@@ -8648,17 +8314,7 @@ def oracle_sql() -> dict[str, str]:
         "duplicate_clusters": duplicate_clusters_sql,
         # identical contract, star algorithm — one oracle, two engines
         "duplicate_clusters_star": duplicate_clusters_sql,
-        "fingerprint_overlap_pairs": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            hashes AS (
-                SELECT doc_id,
-                       list_transform(
-                           [array_to_string(tokens[i:i+2], ' ')
-                            for i in generate_series(
-                                1, greatest(len(tokens)-3, 0)+1)],
-                           g -> md5(g)[1:16]) AS h
-                FROM toks),
+        "fingerprint_overlap_pairs": f"""{shingle_hashes},
             fps AS (
                 SELECT doc_id,
                        unnest(list_distinct(
@@ -8674,17 +8330,7 @@ def oracle_sql() -> dict[str, str]:
                 GROUP BY 1, 2)
             SELECT id_a, id_b, n_shared FROM pairs WHERE n_shared >= 2
         """,
-        "winnowing_fingerprints": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            hashes AS (
-                SELECT doc_id,
-                       list_transform(
-                           [array_to_string(tokens[i:i+2], ' ')
-                            for i in generate_series(
-                                1, greatest(len(tokens)-3, 0)+1)],
-                           g -> md5(g)[1:16]) AS h
-                FROM toks)
+        "winnowing_fingerprints": f"""{shingle_hashes}
             SELECT doc_id,
                    unnest(list_distinct(
                        [list_aggregate(h[i:i+3], 'min')
@@ -8920,30 +8566,10 @@ def oracle_sql() -> dict[str, str]:
                         AS bigint) AS n_correct
             FROM r WHERE rk = 1 GROUP BY 1
         """,
-        "knn_bruteforce": f"""
-            SELECT query_id, neighbor_id, rank, cosine FROM (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       round({cos}, 4) AS cosine,
-                       row_number() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY round({cos}, 4) DESC, c.vec_id ASC) AS rank
-                FROM embeddings q, embeddings c
-                WHERE q.vec_id < 5 AND c.vec_id >= 5)
-            WHERE rank <= 10
-        """,
+        "knn_bruteforce": knn_exact,
         # With nprobe == n_centroids the inverted lists partition the
         # corpus, so IVF must equal exact brute-force KNN — same SQL.
-        "knn_ivf_exhaustive": f"""
-            SELECT query_id, neighbor_id, rank, cosine FROM (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       round({cos}, 4) AS cosine,
-                       row_number() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY round({cos}, 4) DESC, c.vec_id ASC) AS rank
-                FROM embeddings q, embeddings c
-                WHERE q.vec_id < 5 AND c.vec_id >= 5)
-            WHERE rank <= 10
-        """,
+        "knn_ivf_exhaustive": knn_exact,
         # pool gate + exclusions + md5 per-anchor rank, replayed exactly
         "contrastive_pairs": f"""
             WITH pairs AS ({ngram_pairs}),
@@ -9060,19 +8686,7 @@ def oracle_sql() -> dict[str, str]:
         # recursive-CTE components + the dataset_split hash CASE applied
         # to the COMPONENT id (seed 11 — same constants as
         # dataset_split's oracle)
-        "leakage_safe_split": f"""
-            WITH RECURSIVE pairs AS ({ngram_pairs}),
-            edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION ALL
-                SELECT id_b, id_a FROM pairs),
-            reach(id, comp) AS (
-                SELECT doc_id, doc_id FROM documents
-                UNION
-                SELECT e.src, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
-            comps AS (
-                SELECT id AS doc_id, min(comp) AS component
-                FROM reach GROUP BY id)
+        "leakage_safe_split": f"""{components(ngram_pairs)}
             SELECT doc_id, component,
                    CASE WHEN ((component + 11) * 2654435761) % 4294967296
                             < 3435973836 THEN 'train'
@@ -9109,15 +8723,7 @@ def oracle_sql() -> dict[str, str]:
         # brute-force integer-Jaccard pairs fanned over the same
         # thresholds; integer cross-multiplication only, no float at
         # the boundary (matches dedup.py:_exact_pair_sizes)
-        "dedup_threshold_curve": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            docs AS (
-                SELECT doc_id,
-                       list_distinct([array_to_string(tokens[i:i+2], ' ')
-                           for i in generate_series(
-                               1, greatest(len(tokens)-3, 0)+1)]) AS sh
-                FROM toks),
+        "dedup_threshold_curve": f"""{shingle_docs},
             pairs AS (
                 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                        cast(len(list_intersect(a.sh, b.sh)) AS bigint)
@@ -9153,20 +8759,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # recursive-CTE components (same pair list as
         # duplicate_clusters) + the two size aggregates
-        "component_size_report": f"""
-            WITH RECURSIVE pairs AS ({ngram_pairs}),
-            edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION ALL
-                SELECT id_b, id_a FROM pairs),
-            reach(id, comp) AS (
-                SELECT doc_id, doc_id FROM documents
-                UNION
-                SELECT e.src, r.comp FROM edges e JOIN reach r
-                    ON e.dst = r.id),
-            comps AS (
-                SELECT id AS doc_id, min(comp) AS component
-                FROM reach GROUP BY id),
+        "component_size_report": f"""{components(ngram_pairs)},
             sizes AS (
                 SELECT component, cast(count(*) AS bigint) AS cluster_size
                 FROM comps GROUP BY 1)
@@ -9177,20 +8770,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # recursive-CTE components + per-component sorted distinct
         # source list (array_to_string == Spark array_join)
-        "dedup_provenance": f"""
-            WITH RECURSIVE pairs AS ({ngram_pairs}),
-            edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION ALL
-                SELECT id_b, id_a FROM pairs),
-            reach(id, comp) AS (
-                SELECT doc_id, doc_id FROM documents
-                UNION
-                SELECT e.src, r.comp FROM edges e JOIN reach r
-                    ON e.dst = r.id),
-            comps AS (
-                SELECT id AS doc_id, min(comp) AS component
-                FROM reach GROUP BY id)
+        "dedup_provenance": f"""{components(ngram_pairs)}
             SELECT cast(min(c.doc_id) AS bigint) AS rep_id,
                    cast(count(*) AS bigint) AS n_docs,
                    cast(count(DISTINCT d.source) AS bigint) AS n_sources,
@@ -9202,15 +8782,7 @@ def oracle_sql() -> dict[str, str]:
         # identical 64-slot md5-seam signature (Kirsch-Mitzenmacher
         # slot i = min (h1 + i*h2) & 2^32-1), same deterministic pair
         # sample, integer floor division end-to-end
-        "minhash_accuracy": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            docs AS (
-                SELECT doc_id,
-                       list_distinct([array_to_string(tokens[i:i+2], ' ')
-                           for i in generate_series(
-                               1, greatest(len(tokens)-3, 0)+1)]) AS sh
-                FROM toks),
+        "minhash_accuracy": f"""{shingle_docs},
             shl AS (SELECT doc_id, unnest(sh) AS s FROM docs),
             hs AS (
                 SELECT doc_id,
@@ -9381,20 +8953,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # recursive-CTE components + distinct (component, source)
         # self-join, source_a < source_b
-        "source_overlap_near": f"""
-            WITH RECURSIVE pairs AS ({ngram_pairs}),
-            edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION ALL
-                SELECT id_b, id_a FROM pairs),
-            reach(id, comp) AS (
-                SELECT doc_id, doc_id FROM documents
-                UNION
-                SELECT e.src, r.comp FROM edges e JOIN reach r
-                    ON e.dst = r.id),
-            comps AS (
-                SELECT id AS doc_id, min(comp) AS component
-                FROM reach GROUP BY id),
+        "source_overlap_near": f"""{components(ngram_pairs)},
             cs AS (
                 SELECT DISTINCT c.component, d.source
                 FROM comps c JOIN documents d USING (doc_id))
@@ -9406,33 +8965,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         # same exhaustive-equals-exact argument, through the persisted
         # index path (write + load + probe-all-lists)
-        "knn_ivf_persisted": f"""
-            SELECT query_id, neighbor_id, rank, cosine FROM (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       round({cos}, 4) AS cosine,
-                       row_number() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY round({cos}, 4) DESC, c.vec_id ASC) AS rank
-                FROM embeddings q, embeddings c
-                WHERE q.vec_id < 5 AND c.vec_id >= 5)
-            WHERE rank <= 10
-        """,
+        "knn_ivf_persisted": knn_exact,
         "minhash_near_dup": exact_jaccard_pairs,
         "near_dup_pipeline": exact_jaccard_pairs,
-        "dedup_corpus": f"""
-            WITH RECURSIVE pairs AS ({exact_jaccard_pairs}),
-            edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION ALL
-                SELECT id_b, id_a FROM pairs),
-            reach(id, comp) AS (
-                SELECT doc_id, doc_id FROM documents
-                UNION
-                SELECT e.src, r.comp FROM edges e JOIN reach r
-                    ON e.dst = r.id),
-            comps AS (
-                SELECT id AS doc_id, min(comp) AS component
-                FROM reach GROUP BY id),
+        "dedup_corpus": f"""{components(exact_jaccard_pairs)},
             sizes AS (
                 SELECT component,
                        cast(count(*) - 1 AS bigint) AS n_duplicates_removed
@@ -9533,47 +9069,7 @@ def oracle_sql() -> dict[str, str]:
         # shared _lloyd_iter CTEs train on the right set), round-6
         # probe order (ties cid DESC — reverse(array_sort)), round-4
         # scores, integer recall
-        "ann_recall": f"""
-            WITH eall AS (
-                SELECT vec_id,
-                       list_transform(embedding, x -> x::DOUBLE) AS v
-                FROM embeddings),
-            e AS (SELECT vec_id, v FROM eall WHERE vec_id >= 5),
-            qs AS (SELECT vec_id, v FROM eall WHERE vec_id < 5),
-            dims AS (
-                SELECT vec_id, generate_subscripts(v, 1) AS d,
-                       unnest(v) AS val
-                FROM e),
-            c0 AS (
-                SELECT cast(row_number() OVER (ORDER BY vec_id) - 1
-                            AS int) AS cid, v
-                FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-            {_lloyd_iter('c0', 'a1', 'c1')},
-            {_lloyd_iter('c1', 'a2', 'c2')},
-            assign AS (
-                SELECT vec_id, cid FROM (
-                    SELECT e.vec_id, c.cid,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY round(list_dot_product(e.v, c.v)
-                                   / (sqrt(list_dot_product(e.v, e.v))
-                                      * sqrt(list_dot_product(c.v, c.v))),
-                                   6) DESC,
-                                   c.cid ASC) AS rn
-                    FROM e CROSS JOIN c2 c)
-                WHERE rn = 1),
-            probes AS (
-                SELECT query_id, cid FROM (
-                    SELECT q.vec_id AS query_id, c.cid,
-                           row_number() OVER (
-                               PARTITION BY q.vec_id
-                               ORDER BY round(list_dot_product(q.v, c.v)
-                                   / (sqrt(list_dot_product(q.v, q.v))
-                                      * sqrt(list_dot_product(c.v, c.v))),
-                                   6) DESC,
-                                   c.cid DESC) AS rn
-                    FROM qs q CROSS JOIN c2 c)
-                WHERE rn <= 2),
+        "ann_recall": f"""{ivf_probes("a")},
             approx AS (
                 SELECT query_id, neighbor_id FROM (
                     SELECT p.query_id, a.vec_id AS neighbor_id,
@@ -9590,97 +9086,15 @@ def oracle_sql() -> dict[str, str]:
                     JOIN e ce ON ce.vec_id = a.vec_id
                     JOIN qs q ON q.vec_id = p.query_id)
                 WHERE rn <= 10),
-            exact AS (
-                SELECT query_id, neighbor_id FROM (
-                    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                           row_number() OVER (
-                               PARTITION BY q.vec_id
-                               ORDER BY round(list_dot_product(c.v, q.v)
-                                   / (sqrt(list_dot_product(c.v, c.v))
-                                      * sqrt(list_dot_product(q.v, q.v))),
-                                   4) DESC,
-                                   c.vec_id ASC) AS rn
-                    FROM qs q CROSS JOIN e c)
-                WHERE rn <= 10),
-            hits AS (
-                SELECT ex.query_id, ex.neighbor_id,
-                       CASE WHEN ap.neighbor_id IS NOT NULL
-                            THEN 1 ELSE 0 END AS hit
-                FROM exact ex
-                LEFT JOIN approx ap
-                    ON ap.query_id = ex.query_id
-                       AND ap.neighbor_id = ex.neighbor_id)
-            SELECT query_id,
-                   cast(count(*) AS bigint) AS n_exact,
-                   cast(sum(hit) AS bigint) AS n_hits,
-                   cast(sum(hit) * 10000 // count(*) AS bigint)
-                       AS recall_bp
-            FROM hits GROUP BY 1
+            {recall_vs_exact}
         """,
         # ivfpq_recall: the ann_recall construction applied to the
         # IVF-PQ composition — float Lloyd coarse chain (unprefixed)
         # + integer PQ chain ('pq'-prefixed, _pq_sql_ctes) + probe
         # prune + ADC ranking, recall vs round-4 exact brute force
-        "ivfpq_recall": f"""
-            WITH eall AS (
-                SELECT vec_id,
-                       list_transform(embedding, x -> x::DOUBLE) AS v
-                FROM embeddings),
-            e AS (SELECT vec_id, v FROM eall WHERE vec_id >= 5),
-            qs AS (SELECT vec_id, v FROM eall WHERE vec_id < 5),
-            dims AS (
-                SELECT vec_id, generate_subscripts(v, 1) AS d,
-                       unnest(v) AS val
-                FROM e),
-            c0 AS (
-                SELECT cast(row_number() OVER (ORDER BY vec_id) - 1
-                            AS int) AS cid, v
-                FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-            {_lloyd_iter('c0', 'la1', 'c1')},
-            {_lloyd_iter('c1', 'la2', 'c2')},
-            assign AS (
-                SELECT vec_id, cid FROM (
-                    SELECT e.vec_id, c.cid,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY round(list_dot_product(e.v, c.v)
-                                   / (sqrt(list_dot_product(e.v, e.v))
-                                      * sqrt(list_dot_product(c.v, c.v))),
-                                   6) DESC,
-                                   c.cid ASC) AS rn
-                    FROM e CROSS JOIN c2 c)
-                WHERE rn = 1),
-            probes AS (
-                SELECT query_id, cid FROM (
-                    SELECT q.vec_id AS query_id, c.cid,
-                           row_number() OVER (
-                               PARTITION BY q.vec_id
-                               ORDER BY round(list_dot_product(q.v, c.v)
-                                   / (sqrt(list_dot_product(q.v, q.v))
-                                      * sqrt(list_dot_product(c.v, c.v))),
-                                   6) DESC,
-                                   c.cid DESC) AS rn
-                    FROM qs q CROSS JOIN c2 c)
-                WHERE rn <= 2),
+        "ivfpq_recall": f"""{ivf_probes("la")},
             {_pq_sql_ctes("WHERE vec_id >= 5", "pq")},
-            qe AS (
-                SELECT vec_id AS query_id,
-                       list_transform(embedding,
-                           t -> CAST(floor(t::DOUBLE * 1000000.0)
-                                     AS BIGINT)) AS vm
-                FROM embeddings WHERE vec_id < 5),
-            qx AS (
-                SELECT query_id, CAST((d - 1) // 16 AS INT) AS m,
-                       (d - 1) % 16 AS dd, val
-                FROM (SELECT query_id,
-                             generate_subscripts(vm, 1) AS d,
-                             unnest(vm) AS val
-                      FROM qe)),
-            lut AS (
-                SELECT q.query_id, c.m, c.cid,
-                       sum((q.val - c.val) * (q.val - c.val)) AS d2
-                FROM qx q JOIN pqcb2 c ON q.m = c.m AND q.dd = c.dd
-                GROUP BY 1, 2, 3),
+            {_pq_lut_ctes("pq")},
             scored AS (
                 SELECT p.query_id, a.vec_id,
                        CAST(sum(l.d2) AS BIGINT) AS adc_d2
@@ -9698,32 +9112,7 @@ def oracle_sql() -> dict[str, str]:
                                ORDER BY adc_d2 ASC, vec_id ASC) AS rn
                     FROM scored)
                 WHERE rn <= 10),
-            exact AS (
-                SELECT query_id, neighbor_id FROM (
-                    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                           row_number() OVER (
-                               PARTITION BY q.vec_id
-                               ORDER BY round(list_dot_product(c.v, q.v)
-                                   / (sqrt(list_dot_product(c.v, c.v))
-                                      * sqrt(list_dot_product(q.v, q.v))),
-                                   4) DESC,
-                                   c.vec_id ASC) AS rn
-                    FROM qs q CROSS JOIN e c)
-                WHERE rn <= 10),
-            hits AS (
-                SELECT ex.query_id, ex.neighbor_id,
-                       CASE WHEN ap.neighbor_id IS NOT NULL
-                            THEN 1 ELSE 0 END AS hit
-                FROM exact ex
-                LEFT JOIN approx ap
-                    ON ap.query_id = ex.query_id
-                       AND ap.neighbor_id = ex.neighbor_id)
-            SELECT query_id,
-                   cast(count(*) AS bigint) AS n_exact,
-                   cast(sum(hit) AS bigint) AS n_hits,
-                   cast(sum(hit) * 10000 // count(*) AS bigint)
-                       AS recall_bp
-            FROM hits GROUP BY 1
+            {recall_vs_exact}
         """,
         # Lloyd training on the EVEN half (the fixed ruler), round-6
         # ties-asc assignment of both halves, integer permille shares
@@ -9734,28 +9123,8 @@ def oracle_sql() -> dict[str, str]:
                 FROM embeddings),
             e AS (SELECT vec_id, v FROM eall WHERE vec_id % 2 = 0),
             cur AS (SELECT vec_id, v FROM eall WHERE vec_id % 2 = 1),
-            dims AS (
-                SELECT vec_id, generate_subscripts(v, 1) AS d,
-                       unnest(v) AS val
-                FROM e),
-            c0 AS (
-                SELECT cast(row_number() OVER (ORDER BY vec_id) - 1
-                            AS int) AS cid, v
-                FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-            {_lloyd_iter('c0', 'a1', 'c1')},
-            {_lloyd_iter('c1', 'a2', 'c2')},
-            aref AS (
-                SELECT vec_id, cid FROM (
-                    SELECT e.vec_id, c.cid,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY round(list_dot_product(e.v, c.v)
-                                   / (sqrt(list_dot_product(e.v, e.v))
-                                      * sqrt(list_dot_product(c.v, c.v))),
-                                   6) DESC,
-                                   c.cid ASC) AS rn
-                    FROM e CROSS JOIN c2 c)
-                WHERE rn = 1),
+            {lloyd_c2("a")},
+            aref AS ({assign_c2}),
             acur AS (
                 SELECT vec_id, cid FROM (
                     SELECT q.vec_id, c.cid,
@@ -9795,16 +9164,7 @@ def oracle_sql() -> dict[str, str]:
                 SELECT vec_id,
                        list_transform(embedding, x -> x::DOUBLE) AS v
                 FROM embeddings),
-            dims AS (
-                SELECT vec_id, generate_subscripts(v, 1) AS d,
-                       unnest(v) AS val
-                FROM e),
-            c0 AS (
-                SELECT cast(row_number() OVER (ORDER BY vec_id) - 1
-                            AS int) AS cid, v
-                FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-            {_lloyd_iter('c0', 'a1', 'c1')},
-            {_lloyd_iter('c1', 'a2', 'c2')},
+            {lloyd_c2("a")},
             fin AS (
                 SELECT vec_id, cid, cos FROM (
                     SELECT e.vec_id, c.cid,
@@ -9848,15 +9208,7 @@ def oracle_sql() -> dict[str, str]:
         # exact cross-set Jaccard: the band-index probe's recall is
         # complete at fixture similarities, so LSH probe + verify ==
         # brute force (same argument as minhash_near_dup's oracle)
-        "streaming_near_dup": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            docs AS (
-                SELECT doc_id,
-                       list_distinct([array_to_string(tokens[i:i+2], ' ')
-                           for i in generate_series(
-                               1, greatest(len(tokens)-3, 0)+1)]) AS sh
-                FROM toks),
+        "streaming_near_dup": f"""{shingle_docs},
             a AS (SELECT * FROM docs WHERE doc_id % 5 = 0),
             b AS (SELECT * FROM docs WHERE doc_id % 5 <> 0)
             SELECT a.doc_id AS in_id, b.doc_id AS corpus_id,
@@ -10016,20 +9368,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # duplicate_clusters' recursive CTE + the shared quality formula
         # + the keep-best window (score desc, id asc).
-        "dedup_keep_best": f"""
-            WITH RECURSIVE pairs AS ({ngram_pairs}),
-            edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION ALL
-                SELECT id_b, id_a FROM pairs),
-            reach(id, comp) AS (
-                SELECT doc_id, doc_id FROM documents
-                UNION
-                SELECT e.src, r.comp FROM edges e JOIN reach r
-                    ON e.dst = r.id),
-            comp AS (
-                SELECT id AS doc_id, min(comp) AS component
-                FROM reach GROUP BY id),
+        "dedup_keep_best": f"""{components(ngram_pairs, "comp")},
             q AS (
                 SELECT doc_id, {quality_score_sql('text')} AS quality
                 FROM documents),
@@ -10194,22 +9533,7 @@ def oracle_sql() -> dict[str, str]:
         # r12: incremental paragraph dedup — even ids are the standing
         # registry (digest set only), odd ids the arriving shard;
         # registry hit OR a later within-shard copy drops
-        "paragraph_dedup_incremental": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            docs AS (
-                SELECT doc_id,
-                       [array_to_string(tokens[3*i+1 : 3*i+3], ' ')
-                        for i in generate_series(
-                            0, cast(floor((len(tokens)-1) / 3.0)
-                                    AS bigint))] AS paras
-                FROM toks),
-            ex AS (
-                SELECT doc_id, generate_subscripts(paras, 1) AS pos,
-                       unnest(paras) AS para,
-                       doc_id * 1000000
-                           + generate_subscripts(paras, 1) - 1 AS k
-                FROM docs),
+        "paragraph_dedup_incremental": f"""{para_ex},
             registry AS (
                 SELECT DISTINCT para FROM ex WHERE doc_id % 2 = 0),
             shard AS (
@@ -10223,39 +9547,14 @@ def oracle_sql() -> dict[str, str]:
                 SELECT e.doc_id, e.pos, e.para
                 FROM fresh e JOIN firsts f
                   ON e.para = f.para AND e.k = f.kmin),
-            reb AS (
-                SELECT doc_id, list(para ORDER BY pos) AS kparas,
-                       count(*) AS nk
-                FROM kept GROUP BY 1)
-            SELECT d.doc_id,
-                   coalesce(array_to_string(r.kparas, ' | '), '')
-                       AS kept_text,
-                   cast(len(d.paras) AS bigint) AS n_paras,
-                   cast(len(d.paras) - coalesce(r.nk, 0) AS bigint)
-                       AS n_paras_removed
-            FROM docs d LEFT JOIN reb r USING (doc_id)
+            {para_kept_text}
             WHERE d.doc_id % 2 = 1
         """,
         # r13: streaming incremental paragraph dedup — the shard
         # sequence replayed in SQL: survive iff absent from the
         # standing (even-id) registry, in the earliest shard holding
         # the digest, and that shard's own first occurrence
-        "paragraph_dedup_stream": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            docs AS (
-                SELECT doc_id,
-                       [array_to_string(tokens[3*i+1 : 3*i+3], ' ')
-                        for i in generate_series(
-                            0, cast(floor((len(tokens)-1) / 3.0)
-                                    AS bigint))] AS paras
-                FROM toks),
-            ex AS (
-                SELECT doc_id, generate_subscripts(paras, 1) AS pos,
-                       unnest(paras) AS para,
-                       doc_id * 1000000
-                           + generate_subscripts(paras, 1) - 1 AS k
-                FROM docs),
+        "paragraph_dedup_stream": f"""{para_ex},
             registry AS (
                 SELECT DISTINCT para FROM ex WHERE doc_id % 2 = 0),
             fresh AS (
@@ -10275,101 +9574,27 @@ def oracle_sql() -> dict[str, str]:
                 FROM fresh e JOIN firsts f
                   ON e.para = f.para AND e.shard_idx = f.shard_idx
                  AND e.k = f.kmin),
-            reb AS (
-                SELECT doc_id, list(para ORDER BY pos) AS kparas,
-                       count(*) AS nk
-                FROM kept GROUP BY 1)
-            SELECT d.doc_id,
-                   coalesce(array_to_string(r.kparas, ' | '), '')
-                       AS kept_text,
-                   cast(len(d.paras) AS bigint) AS n_paras,
-                   cast(len(d.paras) - coalesce(r.nk, 0) AS bigint)
-                       AS n_paras_removed
-            FROM docs d LEFT JOIN reb r USING (doc_id)
+            {para_kept_text}
             WHERE d.doc_id % 2 = 1
         """,
         # r12: paragraph registry — same chunking + occurrence key as
         # paragraph_dedup, grouped by digest; integer // and % match
         # Spark's div/pmod on the non-negative keys
-        # r13: registry merge — same oracle as paragraph_registry
-        # (the merged shard registries must equal one full recompute)
-        "paragraph_registry_merge": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            docs AS (
-                SELECT doc_id,
-                       [array_to_string(tokens[3*i+1 : 3*i+3], ' ')
-                        for i in generate_series(
-                            0, cast(floor((len(tokens)-1) / 3.0)
-                                    AS bigint))] AS paras
-                FROM toks),
-            ex AS (
-                SELECT doc_id, generate_subscripts(paras, 1) AS pos,
-                       unnest(paras) AS para,
-                       doc_id * 1000000
-                           + generate_subscripts(paras, 1) - 1 AS k
-                FROM docs)
+        "paragraph_registry": f"""{para_ex}
             SELECT md5(para) AS para_digest,
                    CAST(min(k) // 1000000 AS BIGINT) AS first_doc_id,
                    CAST(min(k) % 1000000 AS BIGINT) AS first_pos,
                    CAST(count(*) AS BIGINT) AS n_occurrences
             FROM ex GROUP BY 1
         """,
-        "paragraph_registry": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            docs AS (
-                SELECT doc_id,
-                       [array_to_string(tokens[3*i+1 : 3*i+3], ' ')
-                        for i in generate_series(
-                            0, cast(floor((len(tokens)-1) / 3.0)
-                                    AS bigint))] AS paras
-                FROM toks),
-            ex AS (
-                SELECT doc_id, generate_subscripts(paras, 1) AS pos,
-                       unnest(paras) AS para,
-                       doc_id * 1000000
-                           + generate_subscripts(paras, 1) - 1 AS k
-                FROM docs)
-            SELECT md5(para) AS para_digest,
-                   CAST(min(k) // 1000000 AS BIGINT) AS first_doc_id,
-                   CAST(min(k) % 1000000 AS BIGINT) AS first_pos,
-                   CAST(count(*) AS BIGINT) AS n_occurrences
-            FROM ex GROUP BY 1
-        """,
-        "paragraph_dedup": f"""
-            WITH toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM documents),
-            docs AS (
-                SELECT doc_id,
-                       [array_to_string(tokens[3*i+1 : 3*i+3], ' ')
-                        for i in generate_series(
-                            0, cast(floor((len(tokens)-1) / 3.0)
-                                    AS bigint))] AS paras
-                FROM toks),
-            ex AS (
-                SELECT doc_id, generate_subscripts(paras, 1) AS pos,
-                       unnest(paras) AS para,
-                       doc_id * 1000000
-                           + generate_subscripts(paras, 1) - 1 AS k
-                FROM docs),
+        "paragraph_dedup": f"""{para_ex},
             firsts AS (
                 SELECT para, min(k) AS kmin FROM ex GROUP BY 1),
             kept AS (
                 SELECT e.doc_id, e.pos, e.para
                 FROM ex e JOIN firsts f
                   ON e.para = f.para AND e.k = f.kmin),
-            reb AS (
-                SELECT doc_id, list(para ORDER BY pos) AS kparas,
-                       count(*) AS nk
-                FROM kept GROUP BY 1)
-            SELECT d.doc_id,
-                   coalesce(array_to_string(r.kparas, ' | '), '')
-                       AS kept_text,
-                   cast(len(d.paras) AS bigint) AS n_paras,
-                   cast(len(d.paras) - coalesce(r.nk, 0) AS bigint)
-                       AS n_paras_removed
-            FROM docs d LEFT JOIN reb r USING (doc_id)
+            {para_kept_text}
         """,
         # Same Lloyd-as-CTEs replay as embedding_clusters, then the
         # SemDeDup rule: in-cluster pair test at 6dp-rounded cosine,
@@ -10379,28 +9604,8 @@ def oracle_sql() -> dict[str, str]:
                 SELECT vec_id,
                        list_transform(embedding, x -> x::DOUBLE) AS v
                 FROM embeddings),
-            dims AS (
-                SELECT vec_id, generate_subscripts(v, 1) AS d,
-                       unnest(v) AS val
-                FROM e),
-            c0 AS (
-                SELECT cast(row_number() OVER (ORDER BY vec_id) - 1
-                            AS int) AS cid, v
-                FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-            {{lloyd1}},
-            {{lloyd2}},
-            fin AS (
-                SELECT vec_id, cid FROM (
-                    SELECT e.vec_id, c.cid,
-                           row_number() OVER (
-                               PARTITION BY e.vec_id
-                               ORDER BY round(list_dot_product(e.v, c.v)
-                                   / (sqrt(list_dot_product(e.v, e.v))
-                                      * sqrt(list_dot_product(c.v, c.v))),
-                                   6) DESC,
-                                   c.cid ASC) AS rn
-                    FROM e CROSS JOIN c2 c)
-                WHERE rn = 1),
+            {lloyd_c2("a")},
+            fin AS ({assign_c2}),
             finv AS (
                 SELECT f.vec_id, f.cid, e.v FROM fin f JOIN e USING (vec_id)),
             dropped AS (
@@ -10413,9 +9618,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT f.vec_id, cast(f.cid AS int) AS centroid_id,
                    (d.vec_id IS NULL) AS is_kept
             FROM fin f LEFT JOIN dropped d ON f.vec_id = d.vec_id
-        """.replace("{lloyd1}", _lloyd_iter('c0', 'a1', 'c1')).replace(
-            "{lloyd2}", _lloyd_iter('c1', 'a2', 'c2')
-        ),
+        """,
         # HLL++ at rsd=0.02 stays in its sparse-EXACT representation at
         # fixture cardinalities (150 distinct users/type), and register
         # merge is order-independent, so the sketch deterministically
@@ -10476,28 +9679,8 @@ def oracle_sql() -> dict[str, str]:
             JOIN r ON r.rn = greatest(
                 1, cast(ceil(p * n.n_rows) AS bigint))
         """,
-        "asof_join_forward": """
-            WITH purchases AS (
-                SELECT event_id, user_id, ts FROM events
-                WHERE event_type = 'purchase'),
-            views AS (
-                SELECT user_id, ts, max(event_id) AS view_event_id,
-                       max(value) AS view_value
-                FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-            SELECT l.event_id, l.user_id, l.ts,
-                   r.view_event_id, round(r.view_value, 2) AS view_value
-            FROM purchases l
-            ASOF LEFT JOIN views r
-                ON l.user_id = r.user_id AND l.ts <= r.ts
-        """,
-        "asof_join_nearest": """
-            WITH purchases AS (
-                SELECT event_id, user_id, ts FROM events
-                WHERE event_type = 'purchase'),
-            views AS (
-                SELECT user_id, ts, max(event_id) AS view_event_id,
-                       max(value) AS view_value
-                FROM events WHERE event_type = 'view' GROUP BY user_id, ts),
+        "asof_join_forward": asof_pick("<="),
+        "asof_join_nearest": f"""{asof_views},
             b AS (
                 SELECT l.event_id, l.user_id, l.ts,
                        r.ts AS bts, r.view_event_id AS bid,
@@ -10637,18 +9820,7 @@ def oracle_sql() -> dict[str, str]:
         # change detection is the null-safe (source, text) compare (the
         # Spark side compares md5-int56 fingerprints, equal iff the
         # serialized values are equal); churn is exact integer math
-        "corpus_diff": """
-            WITH old AS (SELECT doc_id, source, text FROM documents),
-            new AS (
-                SELECT doc_id,
-                       CASE WHEN doc_id % 23 = 0 THEN 'remix'
-                            ELSE source END AS source,
-                       CASE WHEN doc_id % 13 = 0 THEN text || ' [r2]'
-                            ELSE text END AS text
-                FROM documents WHERE doc_id % 17 <> 0
-                UNION ALL
-                SELECT doc_id + 10000000, 'synthetic', text
-                FROM documents WHERE doc_id % 19 = 0)
+        "corpus_diff": f"""{corpus_runs}
             SELECT doc_id, source, change_type FROM (
                 SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
                        coalesce(n.source, o.source) AS source,
@@ -10660,18 +9832,7 @@ def oracle_sql() -> dict[str, str]:
                 FROM old o FULL JOIN new n ON o.doc_id = n.doc_id)
             WHERE change_type IS NOT NULL
         """,
-        "corpus_churn": """
-            WITH old AS (SELECT doc_id, source, text FROM documents),
-            new AS (
-                SELECT doc_id,
-                       CASE WHEN doc_id % 23 = 0 THEN 'remix'
-                            ELSE source END AS source,
-                       CASE WHEN doc_id % 13 = 0 THEN text || ' [r2]'
-                            ELSE text END AS text
-                FROM documents WHERE doc_id % 17 <> 0
-                UNION ALL
-                SELECT doc_id + 10000000, 'synthetic', text
-                FROM documents WHERE doc_id % 19 = 0),
+        "corpus_churn": f"""{corpus_runs},
             j AS (
                 SELECT coalesce(n.source, o.source) AS source,
                        o.doc_id IS NOT NULL AS has_old,
@@ -10951,17 +10112,7 @@ def oracle_sql() -> dict[str, str]:
         "domain_mix": f"""
             WITH urls AS (
                 SELECT doc_id, text,
-                       (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://'
-                             ELSE 'http://' END)
-                       || (['www.Example.COM','docs.example.com',
-                            'News.Site.org','cdn.assets.net'])
-                          [cast(doc_id % 4 AS int) + 1]
-                       || (CASE WHEN doc_id % 5 = 0 THEN
-                             CASE WHEN doc_id % 3 = 0 THEN ':443'
-                                  ELSE ':80' END
-                           ELSE '' END)
-                       || '/p/' || cast(doc_id % 40 AS varchar)
-                       || (CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END)
+                       {planted_url}
                        || (['?utm_source=feed&b=2&a=1',
                             '?a=1&b=2&utm_campaign=x', '?b=2&a=1', ''])
                           [cast(doc_id % 4 AS int) + 1]
@@ -11045,6 +10196,8 @@ def oracle_sql() -> dict[str, str]:
     # loaded-index ADC must be hash-identical to the in-plan
     # construction — one contract, two execution paths
     out["pq_ann_persisted"] = out["pq_ann"]
+    # the merged shard registries must equal one full recompute
+    out["paragraph_registry_merge"] = out["paragraph_registry"]
     # nprobe = n_centroids admits every list, so IVF-PQ must equal
     # plain pq_ann bit-for-bit (knn_ivf_exhaustive's certification
     # argument applied to the composition); the dialed knn_ivfpq is
@@ -11105,21 +10258,7 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN agg a USING (doc_id)
             CROSS JOIN prior p
         """
-    out["line_language_mix"] = f"""
-            WITH synth AS (
-                SELECT doc_id,
-                    (CASE WHEN doc_id % 4 = 0
-                        THEN 'der hund ist nicht da und ich' || chr(10)
-                        ELSE '' END)
-                    || array_to_string(
-                        [array_to_string(l[(i*6+1):(i*6+6)], ' ')
-                         for i in generate_series(0, (len(l) - 1) // 6)],
-                        chr(10))
-                    || (CASE WHEN doc_id % 6 = 0
-                        THEN chr(10) || 'le chat est dans la maison pour'
-                        ELSE '' END) AS text
-                FROM (SELECT doc_id, string_split(text, ' ') AS l
-                      FROM documents)),
+    out["line_language_mix"] = f"""{multilingual_pages},
             lines AS (
                 SELECT doc_id, unnest(string_split(text, chr(10))) AS l
                 FROM synth),
@@ -11401,7 +10540,7 @@ def oracle_sql() -> dict[str, str]:
     # ngram_jaccard oracle.  len(sh) > 0 guard: a 0/0 containment is
     # NaN, which DuckDB compares GREATER than the threshold while
     # Spark's candidate generation never emits shingle-less probes.
-    out["containment_pairs"] = f"""
+    quote_shingles = f"""
             WITH base AS (
                 SELECT doc_id, text FROM documents
                 UNION ALL
@@ -11416,7 +10555,8 @@ def oracle_sql() -> dict[str, str]:
                        list_distinct([array_to_string(tokens[i:i+2], ' ')
                            for i in generate_series(
                                1, greatest(len(tokens)-3, 0)+1)]) AS sh
-                FROM toks)
+                FROM toks)"""
+    out["containment_pairs"] = f"""{quote_shingles}
             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                    round(cast(len(list_intersect(a.sh, b.sh)) AS double)
                          / len(a.sh), 4) AS containment
@@ -11428,22 +10568,7 @@ def oracle_sql() -> dict[str, str]:
 
     # r10: containment keep-one verdicts — same brute-force pair base
     # + the strict (|sh|, -id) dominance pick replayed in SQL
-    out["containment_dedup"] = f"""
-            WITH base AS (
-                SELECT doc_id, text FROM documents
-                UNION ALL
-                SELECT doc_id + 100000,
-                       array_to_string(
-                           (string_split(text, ' '))[1:12], ' ')
-                FROM documents WHERE doc_id % 7 = 0),
-            toks AS (
-                SELECT doc_id, {tokens} AS tokens FROM base),
-            sdocs AS (
-                SELECT doc_id,
-                       list_distinct([array_to_string(tokens[i:i+2], ' ')
-                           for i in generate_series(
-                               1, greatest(len(tokens)-3, 0)+1)]) AS sh
-                FROM toks),
+    out["containment_dedup"] = f"""{quote_shingles},
             pairs AS (
                 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                        round(cast(len(list_intersect(a.sh, b.sh))
@@ -11597,19 +10722,7 @@ def oracle_sql() -> dict[str, str]:
     bl_sql = "[" + ", ".join(f"'{d}'" for d in _BLOCKLIST_DOMAINS) + "]"
     out["domain_blocklist"] = f"""
             WITH urls AS (
-                SELECT doc_id,
-                       (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://'
-                             ELSE 'http://' END)
-                       || (['www.Example.COM','docs.example.com',
-                            'News.Site.org','cdn.assets.net'])
-                          [cast(doc_id % 4 AS int) + 1]
-                       || (CASE WHEN doc_id % 5 = 0 THEN
-                             CASE WHEN doc_id % 3 = 0 THEN ':443'
-                                  ELSE ':80' END
-                           ELSE '' END)
-                       || '/p/' || cast(doc_id % 40 AS varchar)
-                       || (CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END)
-                           AS url
+                SELECT doc_id, {planted_url} AS url
                 FROM documents),
             dom AS (
                 SELECT doc_id, {url_domain_sql('url')} AS domain
@@ -12220,21 +11333,7 @@ def oracle_sql() -> dict[str, str]:
 
     # r10: language splitting — the line_language_mix synth + per-line
     # ID + ordered per-(doc, lang) string_agg rebuild.
-    out["language_split"] = f"""
-            WITH synth AS (
-                SELECT doc_id,
-                    (CASE WHEN doc_id % 4 = 0
-                        THEN 'der hund ist nicht da und ich' || chr(10)
-                        ELSE '' END)
-                    || array_to_string(
-                        [array_to_string(l[(i*6+1):(i*6+6)], ' ')
-                         for i in generate_series(0, (len(l) - 1) // 6)],
-                        chr(10))
-                    || (CASE WHEN doc_id % 6 = 0
-                        THEN chr(10) || 'le chat est dans la maison pour'
-                        ELSE '' END) AS text
-                FROM (SELECT doc_id, string_split(text, ' ') AS l
-                      FROM documents)),
+    out["language_split"] = f"""{multilingual_pages},
             lines AS (
                 SELECT doc_id, u.pos, u.l FROM (
                     SELECT doc_id,
@@ -12323,6 +11422,31 @@ def _pq_sql_ctes(corpus_where: str, p: str = "") -> str:
             {assign(f'{p}cb1', f'{p}a2')},
             {recenter(f'{p}cb1', f'{p}a2', f'{p}cb2')},
             {assign(f'{p}cb2', f'{p}a3')}"""
+
+
+def _pq_lut_ctes(p: str = "") -> str:
+    """ADC lookup table ``lut(query_id, m, cid, d2)``: squared distance
+    from each vec_id < 5 query's micro-unit sub-vector ``m`` to every
+    codeword of the ``{p}cb2`` codebooks built by ``_pq_sql_ctes``."""
+    return f"""
+            qe AS (
+                SELECT vec_id AS query_id,
+                       list_transform(embedding,
+                           t -> CAST(floor(t::DOUBLE * 1000000.0)
+                                     AS BIGINT)) AS vm
+                FROM embeddings WHERE vec_id < 5),
+            qx AS (
+                SELECT query_id, CAST((d - 1) // 16 AS INT) AS m,
+                       (d - 1) % 16 AS dd, val
+                FROM (SELECT query_id,
+                             generate_subscripts(vm, 1) AS d,
+                             unnest(vm) AS val
+                      FROM qe)),
+            lut AS (
+                SELECT q.query_id, c.m, c.cid,
+                       sum((q.val - c.val) * (q.val - c.val)) AS d2
+                FROM qx q JOIN {p}cb2 c ON q.m = c.m AND q.dd = c.dd
+                GROUP BY 1, 2, 3)"""
 
 
 def _r9_oracles() -> dict[str, str]:
@@ -12510,24 +11634,7 @@ def _r9_oracles() -> dict[str, str]:
         """,
         "pq_ann": f"""
             WITH {_pq_sql_ctes("WHERE vec_id >= 5")},
-            qe AS (
-                SELECT vec_id AS query_id,
-                       list_transform(embedding,
-                           t -> CAST(floor(t::DOUBLE * 1000000.0)
-                                     AS BIGINT)) AS vm
-                FROM embeddings WHERE vec_id < 5),
-            qx AS (
-                SELECT query_id, CAST((d - 1) // 16 AS INT) AS m,
-                       (d - 1) % 16 AS dd, val
-                FROM (SELECT query_id,
-                             generate_subscripts(vm, 1) AS d,
-                             unnest(vm) AS val
-                      FROM qe)),
-            lut AS (
-                SELECT q.query_id, c.m, c.cid,
-                       sum((q.val - c.val) * (q.val - c.val)) AS d2
-                FROM qx q JOIN cb2 c ON q.m = c.m AND q.dd = c.dd
-                GROUP BY 1, 2, 3),
+            {_pq_lut_ctes()},
             scored AS (
                 SELECT l.query_id, a.vec_id,
                        CAST(sum(l.d2) AS BIGINT) AS adc_d2

@@ -467,10 +467,17 @@ def test_pair_generators_leave_no_persistent_rdds(docs):
         result = dedup.minhash_lsh_pairs(docs)
         result.collect()
         del result
+    # the cleaner runs asynchronously after a JVM GC: poll until the
+    # earlier calls' pairs are released, bounded by a deadline
+    deadline = time.monotonic() + 10.0
+    while True:
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-        time.sleep(1.0)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before + 2
+        n_persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
+        if n_persistent <= before + 2 or time.monotonic() > deadline:
+            break
+        time.sleep(0.1)
+    assert n_persistent <= before + 2
 
 
 def test_quantize_embeddings_report(spark):

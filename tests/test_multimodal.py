@@ -7,6 +7,8 @@ real kernels and the Spark-side contract: schemas, batching,
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from youtube_podcast_data_pipeline_azure_spark import schemas
 from youtube_podcast_data_pipeline_azure_spark.operators import multimodal
@@ -143,6 +145,60 @@ def test_ahash_block_downsample_unequal_cells(spark):
     assets = spark.createDataFrame(rows, schemas.MEDIA_ASSETS)
     out = multimodal.ahash_images(assets).collect()[0]
     assert out.ahash == expected
+
+
+def _ahash_slice_loop(lum, grid: int) -> int:
+    """The per-block slice-sum reference for ahash_images' rule."""
+    hh, ww = lum.shape
+    total, n_pix = int(lum.sum()), hh * ww
+    sig = 0
+    for gy in range(grid):
+        y0, y1 = gy * hh // grid, (gy + 1) * hh // grid
+        for gx in range(grid):
+            x0, x1 = gx * ww // grid, (gx + 1) * ww // grid
+            blk = int(lum[y0:y1, x0:x1].sum())
+            if blk * n_pix > total * (y1 - y0) * (x1 - x0):
+                sig |= 1 << (gy * grid + gx)
+    return sig
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    grid=st.integers(min_value=2, max_value=7),
+    shapes=st.lists(
+        st.tuples(st.integers(1, 9), st.integers(1, 9)), min_size=1, max_size=6
+    ),
+    seed=st.integers(min_value=0, max_value=2**32 - 1),
+)
+@example(grid=4, shapes=[(3, 3)], seed=0)
+def test_ahash_matches_slice_loop_on_images_smaller_than_grid(
+    spark, grid, shapes, seed
+):
+    """Images with fewer rows or columns than ``grid`` have empty
+    blocks; the vectorized kernel must sum them to 0 like the slice
+    loop, not pick up the pixel at the repeated block start."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rows, expected = [], {}
+    for i, (h, w) in enumerate(shapes):
+        if i % 2 == 0:
+            h = min(h, grid - 1)
+        else:
+            w = min(w, grid - 1)
+        arr = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        rows.append((i, "image", "image/raw-rgb", arr.tobytes(), w, h, None, "d"))
+        expected[i] = _ahash_slice_loop(arr.astype(np.int64).sum(axis=2), grid)
+    assets = spark.createDataFrame(rows, schemas.MEDIA_ASSETS)
+    got = {
+        r.asset_id: r.ahash
+        for r in multimodal.ahash_images(assets, grid=grid).collect()
+    }
+    assert got == expected
 
 
 def test_image_near_dup_pairs_lossless(spark):

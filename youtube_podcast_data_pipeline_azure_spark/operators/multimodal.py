@@ -248,6 +248,10 @@ def ahash_images(df: DataFrame, grid: int = 4) -> DataFrame:
                     np.add.reduceat(lum, ys, axis=0), xs, axis=1
                 )
                 n_blk = np.outer(ye - ys, xe - xs)
+                # an image smaller than the grid has zero-width blocks;
+                # reduceat returns the element AT a repeated start index
+                # for those, where the block sum is empty (0)
+                blk[n_blk == 0] = 0
                 if n_pix <= 100_000_000:
                     bits = (blk * n_pix) > (total * n_blk)
                 else:

@@ -851,6 +851,13 @@ def bm25_topk(
     (similarity.py): same top-k retrieval contract, lexical instead of
     dense.  Query terms are DISTINCT (standard bag-of-words query).
 
+    Input contract: ``queries`` holds exactly ONE row per
+    ``query_id_col``.  Terms are deduplicated within each query row's
+    token array, which equals a (query_id, term) DISTINCT only under
+    that contract; a query_id spread over several rows scores each
+    shared term once per row.  Concatenate a query's texts into one
+    row first.
+
     Exactness: every model input (tf, df, dl, N, Σdl) is an exact
     int64; the per-(query, doc, term) contribution is one fixed-shape
     double expression over those ints, quantized to ``floor(1e6·x)``
@@ -929,13 +936,10 @@ def _bm25_from_postings(
     # terms per partition); the pruned dial below remains the
     # registered hot-vocabulary scale path.
     df_t = postings.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    # DISTINCT query terms via a doc-local array_distinct before the
-    # explode (optimization r14, guide §2.4): the workload contract is
-    # one text row per query_id, so per-array dedup equals the global
-    # (query_id, term) DISTINCT — without the distinct's partial/final
-    # aggregate pair and its exchange (one full AQE stage round less
-    # per search; the old shape shuffled the exploded terms only to
-    # dedup within what was already a single row's array).
+    # DISTINCT query terms via a row-local array_distinct before the
+    # explode: under bm25_topk's one-row-per-query_id contract this
+    # equals the global (query_id, term) DISTINCT, without that
+    # aggregate pair and its exchange.
     qterms = queries.select(
         F.col(query_id_col),
         F.explode(
@@ -1100,7 +1104,8 @@ def bm25_topk_from_index(
     loaded postings feed the same scoring core, and the recorded
     (n_docs, sum_dl) scalars enter as plan literals (no stats join, no
     scalar probe job).  The ``max_df_permille`` dial composes — the
-    integer predicate evaluates against the recorded N."""
+    integer predicate evaluates against the recorded N.  ``queries``
+    carries the same one-row-per-``query_id_col`` contract."""
     postings, n_docs, sum_dl, id_col = bm25_index_load(spark, path)
     return _bm25_from_postings(
         postings, queries, text_col, id_col, query_id_col,
