@@ -96,12 +96,37 @@ def bronze_paths(tmp_path_factory):
     return str(d / "videos_raw.json"), str(d / "comments_raw.json")
 
 
-def test_envelope_and_bare_list_reads(spark, bronze_paths):
+def test_envelope_and_bare_list_reads(spark, bronze_paths, tmp_path):
     videos_path, comments_path = bronze_paths
     videos = read_json_envelope(spark, videos_path, schemas.BRONZE_VIDEO_ITEM)
     assert videos.count() == 2
     comments = read_json_envelope(spark, comments_path, schemas.BRONZE_COMMENT_ITEM)
     assert comments.count() == 4
+
+    # every shape in one directory: Spark-written JSON lines, a bare
+    # array, an envelope, and an envelope with no items
+    mixed = tmp_path / "mixed"
+    spark.createDataFrame(
+        [("s1", "spark line", 1), ("s2", None, None)], "videoId string, text string, likes long"
+    ).coalesce(1).write.json(str(mixed))
+    (mixed / "bare.json").write_text(json.dumps([{"videoId": "b1", "text": "t"}, {"videoId": "b2", "likes": 4}]))
+    (mixed / "envelope.json").write_text(
+        json.dumps({"pulledAt": "x", "items": [{"videoId": "e1"}, {"videoId": "e2", "text": "hi"}]})
+    )
+    (mixed / "empty.json").write_text(json.dumps({"pulledAt": "x", "items": []}))
+    both = read_json_envelope(spark, str(mixed), schemas.BRONZE_COMMENT_ITEM)
+    got = {(r.videoId, r.text, r.likes) for r in both.collect()}
+    assert got == {
+        ("s1", "spark line", 1),
+        ("s2", None, None),
+        ("b1", "t", None),
+        ("b2", None, 4),
+        ("e1", None, None),
+        ("e2", "hi", None),
+    }
+    assert both.count() == 6
+    plan = both._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan json") == 1, plan
 
 
 def test_silver_videos_flatten_and_safe_cast(spark, bronze_paths):
@@ -155,6 +180,38 @@ def test_gold_enrichment_and_kpis(spark, bronze_paths):
     # invariant: sentiment counts sum to total (final_kpis.py property)
     assert sum(kpi["comment_sentiment_counts"].values()) == kpi["total_comments"]
     assert sum(kpi["video_sentiment_counts"].values()) == kpi["total_videos"]
+
+
+def test_kpis_empty_source_unknown_sentiment_and_three_jobs(spark, tmp_path):
+    """An empty source totals 0 with an empty map; a NULL sentiment
+    counts under ``unknown`` (final_kpis.py:41-46); writing the KPI row
+    runs at most 3 Spark jobs."""
+    videos = spark.createDataFrame(
+        [("v1", "Positive"), ("v2", None), ("v3", "neutral"), ("v4", "positive")],
+        "video_id string, sentiment string",
+    )
+    comments = spark.createDataFrame([("c1", "negative")], "commentId string, sentiment string")
+    row = medallion.kpis(videos, comments).collect()[0]
+    assert row["total_videos"] == 4
+    assert row["video_sentiment_counts"] == {"positive": 2, "unknown": 1, "neutral": 1}
+    assert row["total_comments"] == 1
+    assert row["comment_sentiment_counts"] == {"negative": 1}
+
+    empty = medallion.kpis(videos, comments.limit(0)).collect()[0]
+    assert empty["total_comments"] == 0
+    assert empty["comment_sentiment_counts"] == {}
+    assert empty["total_videos"] == 4
+    assert [(f.name, f.dataType.simpleString()) for f in medallion.kpis(videos, comments).schema] == [
+        (f.name, f.dataType.simpleString()) for f in schemas.KPIS if f.name != "ingest_date"
+    ]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("kpis_write", "kpis_write")
+    try:
+        medallion.kpis(videos, comments).write.parquet(str(tmp_path / "kpis"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("kpis_write")) <= 3
 
 
 def test_enrichment_malformed_fallback(spark):
@@ -280,3 +337,50 @@ def test_classifier_deterministic_across_processes():
         "select md5_number_upper('42:' || ?)", params=[t]
     ).fetchone()[0]
     assert h_py == h_duck
+
+
+def test_openai_classifier_reuses_one_connection():
+    """N rows go over one keep-alive connection, with the same outputs a
+    connection per row gave; pickling drops the session."""
+    import pickle
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from youtube_podcast_data_pipeline_azure_spark.enrichment.classifier import OpenAICompatClassifier
+
+    peers = set()
+
+    class Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+
+        def do_POST(self):
+            peers.add(self.client_address)
+            body = json.loads(self.rfile.read(int(self.headers["Content-Length"])))
+            text = body["messages"][0]["content"].rsplit(": ", 1)[-1]
+            reply = json.dumps({"choices": [{"message": {"content": text.upper()}}]}).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(reply)))
+            self.end_headers()
+            self.wfile.write(reply)
+
+        def log_message(self, *args):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    try:
+        clf = OpenAICompatClassifier(
+            f"http://127.0.0.1:{server.server_port}", api_key="k", deployment="d", timeout=10
+        )
+        texts = [f"row {i}" for i in range(6)]
+        assert clf.classify_batch(texts, "comment") == [t.upper() for t in texts]
+        assert len(peers) == 1  # one client socket for all six requests
+        clone = pickle.loads(pickle.dumps(clf))
+        assert clone._session is None and clone.endpoint == clf.endpoint
+        assert clone.classify_batch(texts[:2], "video") == [t.upper() for t in texts[:2]]
+        assert len(peers) == 2  # the unpickled copy opened its own
+    finally:
+        server.shutdown()
+        server.server_close()

@@ -1110,3 +1110,33 @@ def test_corpus_diff_exchanges_carry_fingerprints_not_text(spark, sf_dir):
         ]
         assert exchanges, name
         assert all("text" not in ln for ln in exchanges), (name, exchanges)
+
+
+def test_spread_runs_no_job_on_an_exchanged_input(spark, tmp_path):
+    """``spread()`` decides from the plan, never by running it: an input
+    with an upstream aggregate is repartitioned with no Spark job at
+    construct time, and a single-split scan keeps the partition-count
+    check (which reads only file splits) and is spread the same way."""
+    from pyspark.sql import functions as F
+
+    from youtube_podcast_data_pipeline_azure_spark.operators.util import spread
+
+    target = spark.sparkContext.defaultParallelism
+    spark.range(0, 500, numPartitions=1).write.parquet(str(tmp_path / "scan"))
+    scan = spark.read.parquet(str(tmp_path / "scan"))
+    # rows semi-joined to per-key min-id representatives: an aggregate
+    # exchange and a broadcast upstream (dedup.py's representative shape)
+    reps = scan.groupBy((F.col("id") % 7).alias("k")).agg(F.min("id").alias("id"))
+    exchanged = scan.join(reps.select("id"), "id", "left_semi")
+    sc = spark.sparkContext
+    sc.setJobGroup("spread_construct", "spread_construct")
+    try:
+        spread_exchanged = spread(exchanged, "id")
+        spread_scan = spread(scan, "id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("spread_construct") == []
+    for df in (spread_exchanged, spread_scan):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "RepartitionByExpression" in plan and f"], {target}" in plan, plan
+    assert sorted(spread_exchanged.collect()) == [(i,) for i in range(7)]

@@ -17,9 +17,14 @@ Layout:
     operators   medallion transforms, dedup, similarity, multimodal
     enrichment  batched pandas_udf LLM enrichment behind a classifier seam
     streaming   Structured Streaming slice over the events table
+    zipguard    stops Python workers re-reading unchanged zip archives
+                on every task (installed on import)
 """
 
+from youtube_podcast_data_pipeline_azure_spark import zipguard
 from youtube_podcast_data_pipeline_azure_spark.session import get_spark
+
+zipguard.install()
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -113,7 +113,11 @@ class OpenAICompatClassifier(Classifier):
     """OpenAI-compatible chat-completions backend, reference-faithful:
     temperature 0.2, max_tokens 120, 120s timeout (reference
     gold_sentiment_comments.py:37-41).  Requires ``requests`` + endpoint
-    env config at call time; import of this module never does."""
+    env config at call time; import of this module never does.
+
+    Requests go over one keep-alive ``requests.Session`` per process,
+    created lazily and dropped on pickling (as ``io.rest.HttpTransport``)
+    so the classifier ships cleanly into UDF closures."""
 
     def __init__(
         self,
@@ -130,6 +134,14 @@ class OpenAICompatClassifier(Classifier):
         self.temperature = temperature
         self.max_tokens = max_tokens
         self.timeout = timeout
+        self._session = None
+
+    def __getstate__(self):
+        return {k: v for k, v in self.__dict__.items() if k != "_session"}
+
+    def __setstate__(self, state):
+        self.__dict__.update(state)
+        self._session = None
 
     PROMPTS = {
         # strict-JSON contracts, reference gold_sentiment_comments.py:25-30
@@ -149,9 +161,11 @@ class OpenAICompatClassifier(Classifier):
     def classify_batch(self, texts: Sequence[str], mode: str) -> list[str]:
         import requests  # deferred: never needed at import/test time
 
+        if self._session is None:
+            self._session = requests.Session()
         out = []
         for text in texts:
-            resp = requests.post(
+            resp = self._session.post(
                 f"{self.endpoint}/chat/completions",
                 headers={"api-key": self.api_key},
                 json={

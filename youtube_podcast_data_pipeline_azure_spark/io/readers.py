@@ -102,11 +102,13 @@ def read_json_envelope(
     * an envelope object ``{<metadata...>, "items": [records]}``
       (e.g. function_app.py:75-80, silver_clean_comments.py:58-62).
 
-    Implementation: read with a permissive union schema containing both
+    Implementation: ONE scan with a permissive union schema holding both
     the item fields (bare-array shape: Spark maps each array element to
-    a row) and an ``items`` array (envelope shape), then explode the
-    envelope rows.  Pure DataFrame ops — no driver-side sniffing, scales
-    to any number of blob files in one scan.
+    a row) and an ``items`` array (envelope shape).  Each row explodes
+    ``items`` when present, or a one-element array of its own item
+    columns when not, so an envelope with ``"items": []`` yields no row.
+    Pure DataFrame ops — no shape sniffing before the scan, one task per
+    file split, any number of blob files.
     """
     env_fields = list(envelope_fields.fields) if envelope_fields else []
     union_schema = T.StructType(
@@ -116,11 +118,9 @@ def read_json_envelope(
     )
     raw = spark.read.schema(union_schema).json(path)
     item_cols = [f.name for f in item_schema.fields]
-
-    bare = raw.where(F.col("items").isNull()).select(*item_cols)
-    enveloped = (
-        raw.where(F.col("items").isNotNull())
-        .select(F.explode("items").alias("_item"))
-        .select(*[F.col(f"_item.{c}").alias(c) for c in item_cols])
+    items = F.when(
+        F.col("items").isNull(), F.array(F.struct(*item_cols))
+    ).otherwise(F.col("items"))
+    return raw.select(F.explode(items).alias("_item")).select(
+        *[F.col(f"_item.{c}").alias(c) for c in item_cols]
     )
-    return bare.unionByName(enveloped)

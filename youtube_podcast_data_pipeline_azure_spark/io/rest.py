@@ -234,15 +234,17 @@ def ingest_comments(
     """
     import pandas as pd
 
+    # imported here, not at module level: every Python worker unpickles
+    # ``fetch`` below, and must not import the operator modules with it
+    from youtube_podcast_data_pipeline_azure_spark.operators.util import spread
+
     if isinstance(video_ids, DataFrame):
         ids_df = video_ids.select(id_col)
     else:
         ids_df = spark.createDataFrame(
             [(v,) for v in video_ids], f"{id_col} string"
         )
-    n_part = spark.sparkContext.defaultParallelism
-    if ids_df.rdd.getNumPartitions() < n_part:
-        ids_df = ids_df.repartition(n_part)
+    ids_df = spread(ids_df)
 
     cols = [f.name for f in BRONZE_COMMENT_ITEM.fields]
 
