@@ -25,6 +25,24 @@ def test_pagerank_hub_outranks_spokes(spark):
     assert ranks["hub"] > ranks["a"]
 
 
+def test_pagerank_runs_one_checkpoint_and_one_aggregate_per_round(spark):
+    """Building PageRank runs only the edge checkpoint's jobs, and each
+    round adds one join and one aggregate, not a node-table join."""
+    e = _edges(spark, _sym([("hub", "a", 1), ("hub", "b", 1), ("hub", "c", 1)]))
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("pagerank_construct", "pagerank_construct")
+        ranks = graph.pagerank(e, iterations=3)
+        sc.setJobGroup("pagerank_collect", "pagerank_collect")
+        ranks.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    built = len(sc.statusTracker().getJobIdsForGroup("pagerank_construct"))
+    ran = len(sc.statusTracker().getJobIdsForGroup("pagerank_collect"))
+    assert built <= 2, built
+    assert built + ran <= 9, (built, ran)
+
+
 def test_pagerank_weight_matters(spark):
     # b gets a 9x heavier edge from the source than c does
     e = _edges(spark, _sym([("src", "b", 9), ("src", "c", 1)]))
@@ -51,6 +69,19 @@ def test_pagerank_dangling_node_keeps_base_mass(spark):
     assert ranks["a"] == 150_000
     assert ranks["sink"] == 150_000 + 850_000
 
+
+
+def test_pagerank_zero_out_weight_sends_nothing_under_ansi(spark):
+    # "a" has only zero-weight out-edges: its edge sends nothing, and
+    # an ANSI session must not fail on the zero out-weight
+    e = _edges(spark, [("a", "b", 0), ("b", "a", 1), ("b", "c", 1)])
+    saved = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        ranks = {r.node: r.rank_micro for r in graph.pagerank(e, iterations=2).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", saved)
+    assert ranks == {"a": 213_750, "b": 150_000, "c": 213_750}
 
 def test_duplicate_ngram_spans_cross_doc_and_internal_repeat(spark):
     shared = "one two three four five six seven eight nine ten"

@@ -516,9 +516,10 @@ def test_r04_window_queries_stay_within_shuffle_budget(spark, sf_dir):
         "tfidf_cosine_pairs": 12,
         "curation_funnel": 1,         # rep-flag join broadcasts; dedup agg
         "fingerprint_overlap_pairs": 1,  # fp self-join + per-pair count
-        # iterative: ~3/iteration x 3 + setup over localCheckpointed
-        # loop-invariants (was 33 on the naive re-derived lineage)
-        "pagerank_influence": 10,
+        # iterative, over one checkpointed edge list: round 1 is one
+        # aggregate; rounds 2 and 3 each shuffle the checkpoint on src
+        # for the rank join and aggregate by node (no node table)
+        "pagerank_influence": 5,
         # bloom pruning: the bitmap build aggregates to <= m/32 words
         # (1) and the verified output aggregates by priority (1); the
         # prune predicate itself adds ZERO exchanges (literal bitmap)

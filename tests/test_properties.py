@@ -6,7 +6,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -285,6 +285,71 @@ def test_pagerank_tracks_float_reference(spark, edges):
         assert abs(got[n] / 1e6 - rank[n]) < 0.001 * max(rank[n], 1.0), (
             n, got[n], rank[n],
         )
+
+
+def _pagerank_replay(edges, iterations, damping_milli=850):
+    """Plain-Python integer PageRank with the operator's exact rounding:
+    IEEE ``floor(float(rank * w) / float(W))`` per edge, ``W`` summed
+    over every edge of a src (null-dst edges included), edges with a
+    null endpoint sending nothing, and a zero ``W`` sending nothing."""
+    from collections import defaultdict
+
+    from youtube_podcast_data_pipeline_azure_spark.operators.graph import RANK_ONE
+
+    base = (1000 - damping_milli) * RANK_ONE // 1000
+    nodes = {s for s, _, _ in edges} | {d for _, d, _ in edges}
+    out_w = defaultdict(int)
+    for s, _, w in edges:
+        if s is not None:
+            out_w[s] += w
+    rank = dict.fromkeys(nodes, RANK_ONE)
+    for _ in range(iterations):
+        incoming = defaultdict(int)
+        for s, d, w in edges:
+            if s is not None and d is not None and out_w[s]:
+                incoming[d] += math.floor(float(rank[s] * w) / float(out_w[s]))
+        rank = {
+            n: base + math.floor(float(damping_milli * incoming[n]) / 1000.0)
+            for n in nodes
+        }
+    return rank
+
+
+_node = st.one_of(
+    st.none(), st.integers(min_value=0, max_value=5).map(lambda i: f"n{i}")
+)
+
+
+@settings(**_SETTINGS)
+@given(
+    edges=st.lists(
+        st.tuples(_node, _node, st.integers(min_value=0, max_value=4)),
+        max_size=14,
+    ),
+    iterations=st.integers(min_value=0, max_value=4),
+)
+@example(edges=[], iterations=2)
+@example(edges=[("n0", "n1", 1), ("n1", "n0", 1), ("n2", "n0", 3)], iterations=0)
+@example(
+    # self-loop, duplicate edge, zero weight, zero out-weight, dangling
+    # node and both kinds of null endpoint
+    edges=[
+        ("n0", "n0", 2), ("n0", "n1", 3), ("n0", "n1", 3), ("n1", "n2", 0),
+        ("n3", "n1", 0), ("n1", None, 4), (None, "n4", 1), (None, None, 2),
+    ],
+    iterations=4,
+)
+def test_pagerank_equals_integer_replay(spark, edges, iterations):
+    """Directed PageRank equals the integer replay exactly, node for
+    node, on dangling nodes, self-loops, duplicate edges, zero weights,
+    null endpoints and empty input."""
+    from youtube_podcast_data_pipeline_azure_spark.operators.graph import pagerank
+
+    df = spark.createDataFrame(edges, "src string, dst string, w long")
+    rows = pagerank(df, iterations=iterations).collect()
+    got = {r.node: r.rank_micro for r in rows}
+    assert len(got) == len(rows)
+    assert got == _pagerank_replay(edges, iterations)
 
 
 @settings(**_SETTINGS)

@@ -17,11 +17,16 @@ per edge per round — irrelevant for ranking, essential for parity.
 
 Scale posture (10^11-edge graphs):
 
-* Per iteration: one join of edges⋈ranks on ``src`` and one aggregate
-  on ``dst`` — both shuffle on node keys, and the edge table's
-  partitioning is reused across iterations (AQE reuses the exchange;
-  on a real cluster, bucket the edge table by ``src``).
-* Out-degree weights are pre-aggregated ONCE, not per round.
+* The edge list, with each src's out-weight folded onto its edges,
+  is materialized ONCE (one localCheckpoint); no round re-derives it.
+* Per iteration: one left join of the checkpoint to the ranks on
+  ``src`` and one aggregate on node — round 1 joins nothing, since
+  every rank is still the initial one.  There is no node table: each
+  edge also sends a zero to its src, so the aggregate alone gives
+  every endpoint a row.  Each joining round's static plan shuffles
+  the checkpoint on ``src``; the shuffles are identical, so exchange
+  reuse runs one for all rounds (on a real cluster, bucket the edge
+  table by ``src`` to skip even that one).
 * K is a fixed small constant (convergence to ranking stability is
   fast); state per round is one (node, rank) row per node — never
   materialized on the driver.
@@ -30,6 +35,7 @@ Scale posture (10^11-edge graphs):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 #: 1.0 of rank mass, in integer micro-units.
@@ -60,47 +66,53 @@ def pagerank(
     the edge list.
     """
     base = (1000 - damping_milli) * RANK_ONE // 1000
-    # The edge list and its derived node/out-weight tables are
-    # loop-invariant but appear in EVERY iteration's lineage — without
-    # materialization the final plan re-derives them K+1 times (the
-    # classic iterative-DataFrame trap; observed 33 exchanges for K=3
-    # on the raw loop vs 8 after).  localCheckpoint truncates the
-    # lineage so each shows up once (same pattern as
-    # dedup.duplicate_clusters); on a persistent cluster, persist() the
-    # edge table bucketed by src instead.
-    edges = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
-    ).localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # Fold the (loop-invariant) out-weight onto each edge ONCE, so an
-    # iteration is exactly: join ranks on src -> shuffle contributions
-    # on dst -> left-join nodes.  The repeated linked/nodes exchanges
-    # are identical across iterations and AQE's stage cache reuses them.
+    # The edge list is loop-invariant but sits in every round's lineage;
+    # one localCheckpoint truncates it, with the out-weight riding on
+    # each edge as a window sum, so the checkpoint is the whole invariant
+    # state.  An edge with a null endpoint gets a null ``_W`` and sends
+    # nothing (a null src never joins a rank; a null dst is a node no
+    # contribution may reach), but its weight still counts in its src's
+    # out-weight.  A zero out-weight is null too, so it sends nothing
+    # rather than dividing by zero (an error under ANSI).
     linked = (
-        edges.join(edges.groupBy("src").agg(F.sum("w").alias("_W")), "src")
-        .select("src", "dst", "w", "_W")
+        edges.select(
+            F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
+        )
+        .withColumn(
+            "_W",
+            F.when(
+                F.col("src").isNotNull() & F.col("dst").isNotNull(),
+                F.nullif(F.sum("w").over(Window.partitionBy("src")), F.lit(0)),
+            ),
+        )
         .localCheckpoint()
     )
-    ranks = nodes.withColumn("rank_micro", F.lit(RANK_ONE).cast("long"))
-    for _ in range(iterations):
-        contribs = (
-            linked.join(ranks, F.col("src") == F.col("node"))
-            .select(
-                F.col("dst").alias("node_to"),
-                F.floor(
-                    F.col("rank_micro") * F.col("w") / F.col("_W")
-                ).alias("contrib"),
-            )
-            .groupBy("node_to")
-            .agg(F.sum("contrib").alias("incoming"))
+    if iterations < 1:
+        return (
+            linked.select(F.explode(F.array("src", "dst")).alias("node"))
+            .distinct()
+            .select("node", F.lit(RANK_ONE).cast("long").alias("rank_micro"))
         )
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.node_to, "left")
+
+    def step(frame: DataFrame, rank) -> DataFrame:
+        # Every edge sends its contribution to dst and a zero to src, so
+        # one aggregate gives every endpoint a row (a node with no
+        # in-edges gets the base rank) without a node table to join.
+        contrib = F.floor(rank * F.col("w") / F.col("_W"))
+        return (
+            frame.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("dst").alias("node"), contrib.alias("c")),
+                        F.struct(
+                            F.col("src").alias("node"),
+                            F.lit(0).cast("long").alias("c"),
+                        ),
+                    )
+                ).alias("_e")
+            )
+            .groupBy(F.col("_e.node").alias("node"))
+            .agg(F.sum("_e.c").alias("incoming"))
             .select(
                 "node",
                 (
@@ -114,6 +126,14 @@ def pagerank(
                 .cast("long")
                 .alias("rank_micro"),
             )
+        )
+
+    # Round 1 joins nothing: every rank is still RANK_ONE.
+    ranks = step(linked, F.lit(RANK_ONE).cast("long"))
+    for _ in range(iterations - 1):
+        ranks = step(
+            linked.join(ranks, F.col("src") == F.col("node"), "left"),
+            F.col("rank_micro"),
         )
     return ranks
 
