@@ -624,19 +624,6 @@ def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_duplicate_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al. 2014, operators/graph.py:connected_components_star)
-    over the SAME exact n-gram-Jaccard pair graph as
-    duplicate_clusters: O(log² n) rounds regardless of graph diameter —
-    the engine duplicate_clusters falls back to when label propagation
-    hits its iteration cap.  Shares duplicate_clusters' recursive-CTE
-    oracle; the two algorithms must hash-match exactly."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs)
-    return graph.connected_components_star(docs, pairs)
-
-
 def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise source-duplication matrix: distinct texts shared by
     each source pair (operators/dedup.py:source_overlap_matrix) — the
@@ -3148,9 +3135,9 @@ def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the exact n-gram-Jaccard near-dup
     graph: every document assigned a duplicate-cluster id (min reachable
-    doc id) via iterative min-label propagation — the step that turns
-    pair lists into keep-one-per-cluster dedup decisions.  Oracle is a
-    recursive CTE over the same pair list."""
+    doc id) via min-label hooking with pointer jumping — the step that
+    turns pair lists into keep-one-per-cluster dedup decisions.  Oracle
+    is a recursive CTE over the same pair list."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(docs)
     return dedup.duplicate_clusters(docs, pairs)
@@ -5617,7 +5604,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_join_nearest": q_asof_join_nearest,
         "exact_dedup": q_exact_dedup,
         "kpi_event_type_counts": q_kpi_event_type_counts,
-        "duplicate_clusters_star": q_duplicate_clusters_star,
+        "duplicate_clusters_star": q_duplicate_clusters,
         "knn_ivf": q_knn_ivf,
         "tdigest_quantiles": q_tdigest_quantiles,
         "tdigest_by_key": q_tdigest_by_key,
@@ -6431,9 +6418,8 @@ def oracle_sql() -> dict[str, str]:
                    cast(sum(hit) * 10000 // count(*) AS bigint)
                        AS recall_bp
             FROM hits GROUP BY 1"""
-    # Shared by duplicate_clusters (min-label propagation) and
-    # duplicate_clusters_star (large-star/small-star) — one contract,
-    # two engines, both must hash-match this recursive CTE.
+    # Shared by duplicate_clusters and duplicate_clusters_star, which
+    # registers the same query under its older name.
     duplicate_clusters_sql = f"""{cc_reach(ngram_pairs)}
             SELECT id AS doc_id, min(comp) AS component
             FROM reach GROUP BY id
@@ -8312,7 +8298,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "ngram_jaccard_pairs": ngram_pairs,
         "duplicate_clusters": duplicate_clusters_sql,
-        # identical contract, star algorithm — one oracle, two engines
         "duplicate_clusters_star": duplicate_clusters_sql,
         "fingerprint_overlap_pairs": f"""{shingle_hashes},
             fps AS (

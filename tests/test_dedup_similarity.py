@@ -362,8 +362,8 @@ def test_blocked_jaccard_agrees_with_ppjoin(docs):
 
 
 def test_duplicate_clusters_chain_and_triangle(spark):
-    """Label propagation must close transitive chains (1-2, 2-3 => one
-    component) across >1 iteration, keep disjoint cliques apart, and
+    """Connected components must close transitive chains (1-2, 2-3 =>
+    one component) across >1 round, keep disjoint cliques apart, and
     label singletons as their own component."""
     docs = spark.createDataFrame(
         [(i,) for i in range(1, 8)], "doc_id long"
@@ -388,6 +388,42 @@ def test_duplicate_clusters_all_singletons(spark):
         for r in dedup.duplicate_clusters(docs, pairs).collect()
     }
     assert got == {10: 10, 20: 20, 30: 30}
+
+
+def test_duplicate_clusters_degenerate_inputs(spark):
+    """The duplicate_clusters contract on shapes pair generators never
+    emit: a pair endpoint outside ``docs`` bridges nothing and adds no
+    row; self-loops and both directions of a pair are one edge; ids are
+    deduplicated and a null id gets a null component; empty ``pairs``
+    leaves every doc alone; the output keeps the docs' id type."""
+
+    def clusters(ids, edges):
+        docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        rows = dedup.duplicate_clusters(docs, pairs).collect()
+        return sorted(
+            ((r.doc_id, r.component) for r in rows),
+            key=lambda r: (r[0] is None, r[0]),
+        )
+
+    assert clusters([1, 2], [(1, 99), (99, 2)]) == [(1, 1), (2, 2)]
+    assert clusters([1, 2, 3], [(2, 2), (3, 3), (3, 1)]) == [
+        (1, 1), (2, 2), (3, 1)
+    ]
+    assert clusters([4, 5, 6], [(6, 5), (5, 6), (5, 6)]) == [
+        (4, 4), (5, 5), (6, 5)
+    ]
+    assert clusters([2, 1, 2, None, 1, None], [(1, 2), (None, 1)]) == [
+        (1, 1), (2, 1), (None, None)
+    ]
+    assert clusters([3, 1], []) == [(1, 1), (3, 3)]
+    assert clusters([], [(1, 2)]) == []
+    # int ids against long pairs keep the docs' id type
+    docs = spark.createDataFrame([(1,), (2,)], "doc_id int")
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    out = dedup.duplicate_clusters(docs, pairs)
+    assert out.dtypes == [("doc_id", "int"), ("component", "int")]
+    assert sorted(map(tuple, out.collect())) == [(1, 1), (2, 1)]
 
 
 def test_cluster_profile_deterministic_and_complete(spark, sf_dir):

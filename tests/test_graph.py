@@ -142,27 +142,42 @@ def test_cooccurrence_repeat_interactions_dont_multiply(spark):
     assert [(r["a"], r["b"]) for r in out] == [(1, 2)]
 
 
-def test_star_cc_equals_label_propagation_on_cliques_and_chains(spark):
+def union_find_components(nodes, edges):
+    """Plain-Python reference for ``dedup.duplicate_clusters``: one
+    (id, min id of its component) per distinct node, counting only
+    edges whose two ends are both nodes."""
+    parent = {v: v for v in nodes}
+
+    def find(v):
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        if a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return sorted((v, find(v)) for v in parent)
+
+
+def test_duplicate_clusters_equals_union_find_on_cliques_and_chains(spark):
     from youtube_podcast_data_pipeline_azure_spark.operators.dedup import duplicate_clusters
-    from youtube_podcast_data_pipeline_azure_spark.operators.graph import (
-        connected_components_star,
-    )
 
-    nodes = spark.createDataFrame([(i,) for i in range(1, 31)], "doc_id long")
-    pairs = spark.createDataFrame(
-        # a clique, a pair, a triangle-with-tail, singletons implicit
-        [(1, 2), (2, 3), (1, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
-        "id_a long, id_b long",
-    )
-    a = sorted(map(tuple, connected_components_star(nodes, pairs).collect()))
-    b = sorted(map(tuple, duplicate_clusters(nodes, pairs).collect()))
-    assert a == b
+    ids = list(range(1, 31))
+    # a clique, a pair, a triangle-with-tail, singletons implicit
+    edges = [(1, 2), (2, 3), (1, 3), (10, 11), (20, 21), (21, 22), (22, 23)]
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = sorted(map(tuple, duplicate_clusters(nodes, pairs).collect()))
+    assert got == union_find_components(ids, edges)
 
 
-def test_duplicate_clusters_long_chain_falls_back_to_star(spark):
-    """A graph whose diameter exceeds the label-propagation iteration
-    cap must still return CORRECT components (r5: the capped loop used
-    to split a 40-chain into 20 bogus components silently)."""
+def test_duplicate_clusters_long_chain(spark):
+    """A graph whose diameter far exceeds the round count must still
+    return CORRECT components (a capped loop would split a 40-chain
+    into bogus components silently), and pointer jumping with the
+    in-job change count keeps building and collecting it to at most
+    100 Spark jobs."""
     from youtube_podcast_data_pipeline_azure_spark.operators.dedup import duplicate_clusters
 
     n = 40
@@ -170,16 +185,21 @@ def test_duplicate_clusters_long_chain_falls_back_to_star(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
     )
-    comps = {r["component"] for r in duplicate_clusters(nodes, chain).collect()}
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("cc_chain_jobs", "cc_chain_jobs")
+        comps = {r["component"] for r in duplicate_clusters(nodes, chain).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert comps == {1}
+    jobs = len(sc.statusTracker().getJobIdsForGroup("cc_chain_jobs"))
+    assert jobs <= 100, jobs
 
 
 def test_star_cc_handles_empty_and_singletons(spark):
-    from youtube_podcast_data_pipeline_azure_spark.operators.graph import (
-        connected_components_star,
-    )
+    from youtube_podcast_data_pipeline_azure_spark.operators.dedup import duplicate_clusters
 
     nodes = spark.createDataFrame([(5,), (7,), (9,)], "doc_id long")
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    got = sorted(map(tuple, connected_components_star(nodes, empty).collect()))
+    got = sorted(map(tuple, duplicate_clusters(nodes, empty).collect()))
     assert got == [(5, 5), (7, 7), (9, 9)]

@@ -606,7 +606,7 @@ def test_r05_window_queries_stay_within_shuffle_budget(spark, sf_dir):
         "join_cardinality": 4,
         # linear-edge components (rep pairs ∪ member→rep stars): the
         # static plan shows the fingerprint collapse + edge build; the
-        # label-prop loop runs eagerly through localCheckpoints before
+        # component rounds run eagerly through localCheckpoints before
         # this plan is inspected
         "dedup_corpus": 2,
     }
@@ -688,7 +688,7 @@ def test_r06_new_queries_stay_within_shuffle_budget(spark, sf_dir):
         # (AQE reuses the exchange at runtime): 2x (distinct + deg agg
         # + anti probe) + the final edge dedup
         "cooccurrence_edges": 7,
-        # components run eagerly through the label-prop/star
+        # components run eagerly through the per-round
         # localCheckpoints; the final plan is a checkpoint scan + the
         # hash-CASE split projection — zero exchanges
         "leakage_safe_split": 0,
@@ -698,7 +698,7 @@ def test_r06_new_queries_stay_within_shuffle_budget(spark, sf_dir):
         # exchanges with the PPJoin pasted per aggregate); final plan =
         # checkpoint scan -> fan-out -> two aggs + zero-fill joins
         "dedup_threshold_curve": 4,
-        # components run through the label-prop checkpoints; final plan
+        # components run through the per-round checkpoints; final plan
         # = checkpoint scan + source join + one aggregate per grain
         "component_size_report": 2,
         "dedup_provenance": 2,
@@ -731,7 +731,7 @@ def test_r06_new_queries_stay_within_shuffle_budget(spark, sf_dir):
         # MG summary merge + per-key totals + candidate exact-count +
         # final threshold join — each over ≤k-per-partition summaries
         "mg_heavy_hitters_by_key": 4,
-        # components run through the label-prop checkpoints; final plan
+        # components run through the per-round checkpoints; final plan
         # = checkpoint scan + source join + (component, source)
         # distinct pasted into both self-join legs + pair agg
         "source_overlap_near": 5,

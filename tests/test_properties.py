@@ -509,25 +509,21 @@ def test_vocabulary_growth_conserves_totals(spark, texts, parts):
         max_size=30,
     ),
 )
-def test_star_cc_equals_label_propagation(spark, edges):
-    """large-star/small-star and (converged) min-label propagation must
-    produce identical components on arbitrary graphs."""
+def test_duplicate_clusters_equals_union_find(spark, edges):
+    """duplicate_clusters must produce the components of a plain-Python
+    union-find on arbitrary graphs."""
     from youtube_podcast_data_pipeline_azure_spark.operators.dedup import duplicate_clusters
-    from youtube_podcast_data_pipeline_azure_spark.operators.graph import (
-        connected_components_star,
-    )
+    from tests.test_graph import union_find_components
 
-    nodes = spark.createDataFrame([(i,) for i in range(1, 26)], "doc_id long")
+    ids = list(range(1, 26))
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     pairs = spark.createDataFrame(
         edges or [(0, 0)], "id_a long, id_b long"
     )
     if not edges:
         pairs = pairs.where("id_a < 0")
-    a = sorted(map(tuple, connected_components_star(nodes, pairs).collect()))
-    b = sorted(
-        map(tuple, duplicate_clusters(nodes, pairs, max_iterations=30).collect())
-    )
-    assert a == b
+    got = sorted(map(tuple, duplicate_clusters(nodes, pairs).collect()))
+    assert got == union_find_components(ids, edges)
 
 
 @settings(**_SETTINGS)

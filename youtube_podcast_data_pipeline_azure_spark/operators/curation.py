@@ -603,9 +603,8 @@ def leakage_safe_split(
 
     Composition: connected components over the supplied near-dup
     ``pairs`` graph (``dedup.duplicate_clusters`` — min-reachable-id
-    labels, star-CC fallback on pathological diameters), then the
-    content-hash split gate applied to the component id
-    (``sampling.dataset_split``).  Stable under re-runs, retries,
+    labels), then the content-hash split gate applied to the component
+    id (``sampling.dataset_split``).  Stable under re-runs, retries,
     repartitioning, and appends, like every hash-gated sampler here.
 
     Returns (id_col, component, split) for every input document.

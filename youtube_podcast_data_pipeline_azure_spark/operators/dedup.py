@@ -31,7 +31,8 @@ bucket blowup during candidate generation.  The production recipe is
 therefore: (1) :func:`exact_dedup` first — collapses exact/boilerplate
 clusters with a hash-groupBy whose shuffle carries 32-char digests,
 never bodies; (2) near-dup pair generation over the surviving
-representatives only; (3) :func:`duplicate_clusters` to fold pairs
+representatives only; (3) :func:`duplicate_clusters` (connected
+components, one checkpoint per pointer-jumping round) to fold pairs
 into keep-one decisions.  MinHash-LSH degrades most gracefully under
 residual hot clusters (banded candidates, constant per-doc signature
 work) and is the default at scale; the PPJoin path is the lossless
@@ -50,6 +51,7 @@ from youtube_podcast_data_pipeline_azure_spark.functions.text import (
     rolling_fingerprint,
     tokenize,
 )
+from youtube_podcast_data_pipeline_azure_spark.operators.observability import observed
 from youtube_podcast_data_pipeline_azure_spark.operators.util import spread
 
 
@@ -642,9 +644,9 @@ def ngram_jaccard_pairs(
     # plan, so the spread() exchange is reused and AQE's stage cache
     # dedupes the repeated subtrees at runtime; a persist here cached
     # full shingle arrays for the session lifetime (never unpersisted)
-    # and would spill cluster-wide at 100 TB.  Re-measured in r14
-    # (tools/ab_ngram_r14.py, 5-run medians at sf0.1): no-checkpoint
-    # 2.23 s vs (id, sh)-checkpoint 3.41 s vs prefix-table checkpoint
+    # and would spill cluster-wide at 100 TB.  Measured at sf0.1
+    # (5-run medians, OPTIMIZATION_r14.md): no-checkpoint 2.23 s vs
+    # (id, sh)-checkpoint 3.41 s vs prefix-table checkpoint
     # 6.48 s — materializing either intermediate LOSES because the
     # checkpoint forces a full write of the arrays while the AQE stage
     # cache was already skipping the "recomputed" subtrees, and the
@@ -894,7 +896,6 @@ def duplicate_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Assign every document to a duplicate cluster: connected
     components over the near-duplicate pair graph, component id = the
@@ -902,78 +903,79 @@ def duplicate_clusters(
     (MinHash / SimHash / n-gram Jaccard output) into keep-one-per-
     cluster dedup decisions.
 
-    Algorithm: iterative min-label propagation.  Each round, every node
-    takes the min of its own label and its neighbors' labels; a round is
-    one shuffle on the edge endpoints, and convergence takes
-    O(graph diameter) rounds — near-dup graphs are overwhelmingly tiny
-    cliques, so 2-3 rounds in practice.  Each round's labels are
-    localCheckpoint'ed: the plan stays O(1) deep instead of O(rounds)
-    (lineage blow-up is the classic iterative-algorithm failure mode on
-    Spark).  At 100 TB the same loop holds — state is one (id, label)
-    row per document and edges are never materialized driver-side.
+    Contract: one row per distinct ``docs`` id, (id_col, component).
+    Only pairs between two ``docs`` ids are edges — an endpoint that is
+    not a doc neither bridges two docs nor adds a row.  Self-loops,
+    repeated pairs and either pair direction are the same edge; a null
+    id is its own row with a null component; empty ``pairs`` makes
+    every doc its own component.  Both columns keep the docs id type.
 
-    If the loop does NOT converge within ``max_iterations`` (a graph
-    with diameter > max_iterations — long chains, not cliques), the
-    function falls back to
-    ``graph.connected_components_star`` (Kiveris et al. '14
-    large-star/small-star, O(log² n) rounds regardless of diameter)
-    rather than returning silently-wrong partial labels — caught live
-    in r5 by a 40-node chain, which the capped loop split into 20
-    bogus components.
-
-    Returns (id_col, component) for EVERY input document (singletons are
-    their own component).
+    Algorithm: min-label hooking with pointer jumping.  The symmetric
+    edge list is built from one scan of ``pairs`` and checkpointed once.
+    Each round every node takes the least label among itself and its
+    neighbours (one aggregate over its own row and its edges' rows; a
+    non-doc endpoint has no own row and is dropped), then jumps once
+    through the previous round's labels, ``comp := least(comp,
+    prev[comp])``.  A chain's labels travel about twice as far each
+    round, so the round count grows with log(diameter), not diameter.
+    Each round is one eager localCheckpoint (plan depth stays O(1));
+    the count of rows whose label changed is observed inside that same
+    job, and the loop stops when it reads 0.  It always stops: a
+    changed row takes a strictly smaller id of its own component.
     """
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    edges = edges.persist()
-
+    # drops self-loops and pairs with a null end; a repeated pair only
+    # repeats a row of the min aggregate, so pairs are not deduplicated
+    edges = (
+        pairs.where(F.col("id_a") != F.col("id_b"))
+        .select(
+            F.inline(
+                F.array(
+                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+                )
+            )
+        )
+        .localCheckpoint()
+    )
     labels = (
         docs.select(F.col(id_col).alias("id"))
         .dropDuplicates(["id"])
         .withColumn("comp", F.col("id"))
-        .localCheckpoint()
     )
-    converged = False
-    for _ in range(max_iterations):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("comp").alias("nbr_comp"))
+    while True:
+        own = labels.select(
+            "id", "comp", F.col("comp").alias("old"), F.lit(True).alias("own")
         )
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
+        nbrs = edges.join(
+            labels.select(F.col("id").alias("dst"), F.col("comp").alias("nbr")), "dst"
+        ).select(
+            F.col("src").alias("id"), F.col("nbr").alias("comp"),
+            F.lit(None).alias("old"), F.lit(None).alias("own"),
+        )
+        hooked = (
+            own.unionByName(nbrs)
+            .groupBy("id")
+            .agg(F.min("comp").alias("comp"), F.max("old").alias("old"),
+                 F.max("own").alias("own"))
+            .where("own")
+        )
+        # same projection shape as the neighbour lookup: one exchange
+        ptr = labels.select(F.col("id").alias("comp"), F.col("comp").alias("jump"))
+        jumped, obs = observed(
+            hooked.join(ptr, "comp", "left").select(
+                "id", "old", F.least("comp", "jump").alias("comp")
+            ),
+            "duplicate_clusters_round",
+            {"changed": F.count(F.when(F.col("comp") != F.col("old"), 1))},
+        )
+        labels = jumped.select("id", "comp").localCheckpoint()
+        if obs.get["changed"] == 0:
+            # the union may have widened ids to the pair type; every id
+            # left is a docs id, so casting back is lossless
+            return labels.select(
+                F.col("id").cast(docs.schema[id_col].dataType).alias(id_col),
+                F.col("comp").alias("component"),
             )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        # diameter > max_iterations: partial labels would be WRONG, not
-        # merely stale — hand the graph to the diameter-independent
-        # star algorithm instead
-        from youtube_podcast_data_pipeline_azure_spark.operators.graph import (
-            connected_components_star,
-        )
-
-        return connected_components_star(docs, pairs, id_col=id_col)
-    return labels.select(F.col("id").alias(id_col), F.col("comp").alias("component"))
 
 
 # ---------------------------------------------------------------------------
@@ -1810,8 +1812,8 @@ def component_size_report(
     is bridging unrelated documents — THE standing failure mode of
     web-scale dedup, worth one cheap report before deleting anything.
 
-    Components via :func:`duplicate_clusters` (min-label propagation
-    with the diameter-safe star fallback), then two aggregates —
+    Components via :func:`duplicate_clusters` (min-label hooking with
+    pointer jumping), then two aggregates —
     component → size, size → (n_clusters, n_docs) — both map-side
     partial, both over (id, label) rows only.
 

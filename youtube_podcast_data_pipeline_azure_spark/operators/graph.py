@@ -1,9 +1,10 @@
-"""Graph analytics over DataFrames: integer-arithmetic PageRank.
+"""Graph analytics over DataFrames: integer-arithmetic PageRank,
+co-occurrence edges and triangle counts.
 
-Complements the connected-components operator in ``operators/dedup.py``
-(duplicate clustering) with the other classic iterative-relational
-algorithm: PageRank over an edge list, expressed as K rounds of
-join + aggregate.  No reference analog (SURVEY.md §2 — the reference
+Connected components are ``operators/dedup.py:duplicate_clusters``
+(the engine's one CC operator).  PageRank is the other classic
+iterative-relational algorithm: K rounds of join + aggregate over an
+edge list.  No reference analog (SURVEY.md §2 — the reference
 has no joins at all); this is the engine's demonstration that iterative
 algorithms stay in the DataFrame/Catalyst world rather than dropping to
 RDDs.
@@ -254,105 +255,3 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         )
     )
 
-
-def connected_components_star(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_rounds: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the scale path `dedup.duplicate_clusters`' docstring
-    points at for pathological graphs.
-
-    Min-label propagation converges in O(graph diameter) rounds — fine
-    for near-dup graphs (tiny cliques) but hopeless for a 10⁶-node
-    chain.  The star operations square the propagation distance per
-    round instead: **large-star** connects every neighbor LARGER than
-    u to u's minimum neighborhood node, **small-star** folds the
-    smaller neighbors (and u) onto their minimum, and alternating the
-    two provably converges in O(log² n) rounds to a forest of stars
-    rooted at each component's minimum id.  Every round is two
-    aggregate+join passes over the edge list — per-round cost is
-    O(|E|) and independent of diameter; each intermediate is
-    localCheckpoint'ed so plan depth stays O(1).
-
-    Convergence is detected on the exact edge fixpoint (symmetric
-    difference empty), at which point every non-root carries exactly
-    one edge to its component root.  Returns (id_col, component) for
-    EVERY input node — identical output contract (and, by min-root
-    construction, identical values) to ``duplicate_clusters``.
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint()
-    )
-    for _ in range(max_rounds):
-        sym = edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        # large-star: (v, m(u)) for v in Γ(u), v > u; m = min(Γ(u) ∪ u)
-        m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("u", "_mn").alias("m"))
-        )
-        large = (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .dropDuplicates(["u", "v"])
-            .localCheckpoint()
-        )
-        # small-star over the large-star output: fold u and its smaller
-        # neighbors onto their minimum; (u, m) keeps u attached
-        sym1 = large.union(
-            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        small_nbrs = sym1.where(F.col("v") < F.col("u"))
-        m2 = small_nbrs.groupBy("u").agg(F.min("v").alias("m"))
-        folded = (
-            small_nbrs.join(m2, "u")
-            .where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(m2.select("u", F.col("m").alias("v")))
-            .select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .dropDuplicates(["u", "v"])
-            .localCheckpoint()
-        )
-        # convergence = exact edge fixpoint; the two-sided subtract is
-        # the expensive part, so gate it on the cheap count probe
-        # (different cardinality ⇒ definitely changed — both frames are
-        # canonical + deduplicated, so equal sets ⇒ equal counts).
-        # Both sides are localCheckpoint'ed, so the counts are block
-        # scans, not recomputation.
-        if folded.count() != edges.count():
-            changed = 1
-        else:
-            changed = (
-                folded.subtract(edges)
-                .union(edges.subtract(folded))
-                .limit(1)
-                .count()
-            )
-        edges = folded
-        if changed == 0:
-            break
-    comp = edges.groupBy("u").agg(F.min("v").alias("_comp"))
-    return (
-        nodes.select(F.col(id_col).alias("_id"))
-        .dropDuplicates(["_id"])
-        .join(comp.select(F.col("u").alias("_id"), "_comp"), "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            F.coalesce("_comp", F.col("_id")).alias("component"),
-        )
-    )
