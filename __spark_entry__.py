@@ -3135,7 +3135,7 @@ def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the exact n-gram-Jaccard near-dup
     graph: every document assigned a duplicate-cluster id (min reachable
-    doc id) via min-label hooking with pointer jumping — the step that
+    doc id) via FastSV-style hooking and shortcutting — the step that
     turns pair lists into keep-one-per-cluster dedup decisions.  Oracle
     is a recursive CTE over the same pair list."""
     docs = _t(spark, sf_dir, "documents")

@@ -832,10 +832,11 @@ def main() -> None:
 
         # pathological graph: a pure chain — diameter = n, the case
         # where iteration-capped label propagation silently mislabels.
-        # duplicate_clusters' per-round cost is O(|E|) and pointer
-        # jumping makes the rounds O(log n), so 5x the chain must grow
-        # wall-clock ~linearly in |E| (ratio <= growth_factor), NOT with
-        # the 5x-deeper diameter plain label propagation would need.
+        # duplicate_clusters' per-round cost is O(|E|) and its rounds
+        # stayed within log2(n) + 3 on every chain measured (no proven
+        # bound), so 5x the chain should grow wall-clock ~linearly in |E|
+        # (ratio <= growth_factor), NOT with the 5x-deeper diameter plain
+        # label propagation would need.
         # The single-component check doubles as the correctness probe.
         from youtube_podcast_data_pipeline_azure_spark.operators.dedup import (
             duplicate_clusters,

@@ -3,6 +3,8 @@ the cross-document repeated-span detector."""
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
 from youtube_podcast_data_pipeline_azure_spark.operators import dedup, graph
@@ -175,25 +177,34 @@ def test_duplicate_clusters_equals_union_find_on_cliques_and_chains(spark):
 def test_duplicate_clusters_long_chain(spark):
     """A graph whose diameter far exceeds the round count must still
     return CORRECT components (a capped loop would split a 40-chain
-    into bogus components silently), and pointer jumping with the
-    in-job change count keeps building and collecting it to at most
-    100 Spark jobs."""
+    into bogus components silently), and building and collecting it
+    stays within 100 Spark jobs whatever the id order along the chain:
+    ascending; the global minimum at one end and a local minimum at the
+    other (1-40-39-...-2, where a min label that moves one hop a round
+    would need about 40 rounds); and a shuffled order."""
     from youtube_podcast_data_pipeline_azure_spark.operators.dedup import duplicate_clusters
 
     n = 40
+    shuffled = list(range(1, n + 1))
+    random.Random(7).shuffle(shuffled)
+    orders = {
+        "ascending": list(range(1, n + 1)),
+        "min_at_far_end": [1] + list(range(n, 1, -1)),
+        "shuffled": shuffled,
+    }
     nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "doc_id long")
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
-    )
     sc = spark.sparkContext
-    try:
-        sc.setJobGroup("cc_chain_jobs", "cc_chain_jobs")
-        comps = {r["component"] for r in duplicate_clusters(nodes, chain).collect()}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert comps == {1}
-    jobs = len(sc.statusTracker().getJobIdsForGroup("cc_chain_jobs"))
-    assert jobs <= 100, jobs
+    for name, order in orders.items():
+        chain = spark.createDataFrame(list(zip(order, order[1:])), "id_a long, id_b long")
+        group = f"cc_chain_jobs_{name}"
+        try:
+            sc.setJobGroup(group, group)
+            comps = {r["component"] for r in duplicate_clusters(nodes, chain).collect()}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert comps == {1}, name
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= 100, (name, jobs)
 
 
 def test_star_cc_handles_empty_and_singletons(spark):

@@ -32,7 +32,7 @@ therefore: (1) :func:`exact_dedup` first — collapses exact/boilerplate
 clusters with a hash-groupBy whose shuffle carries 32-char digests,
 never bodies; (2) near-dup pair generation over the surviving
 representatives only; (3) :func:`duplicate_clusters` (connected
-components, one checkpoint per pointer-jumping round) to fold pairs
+components, one checkpoint per hooking round) to fold pairs
 into keep-one decisions.  MinHash-LSH degrades most gracefully under
 residual hot clusters (banded candidates, constant per-doc signature
 work) and is the default at scale; the PPJoin path is the lossless
@@ -910,21 +910,25 @@ def duplicate_clusters(
     id is its own row with a null component; empty ``pairs`` makes
     every doc its own component.  Both columns keep the docs id type.
 
-    Algorithm: min-label hooking with pointer jumping.  The symmetric
-    edge list is built from one scan of ``pairs`` and checkpointed once.
-    Each round every node takes the least label among itself and its
-    neighbours (one aggregate over its own row and its edges' rows; a
-    non-doc endpoint has no own row and is dropped), then jumps once
-    through the previous round's labels, ``comp := least(comp,
-    prev[comp])``.  A chain's labels travel about twice as far each
-    round, so the round count grows with log(diameter), not diameter.
-    Each round is one eager localCheckpoint (plan depth stays O(1));
-    the count of rows whose label changed is observed inside that same
-    job, and the loop stops when it reads 0.  It always stops: a
-    changed row takes a strictly smaller id of its own component.
+    Algorithm: FastSV-style hooking (Zhang, Azad & Hu, 2020) on a
+    forest where each doc points at a doc id no larger than its own.
+    One scan of ``docs`` and ``pairs`` builds the symmetric edge list
+    plus a self-edge per distinct doc id, checkpointed once.  Each round
+    every doc takes the least grandparent label among itself and its
+    neighbours (shortcut + hooking; a non-doc endpoint has no self-edge
+    and is dropped) and offers it to its parent (root hooking), so a
+    tree's root takes a smaller label as soon as any child sees one.
+    Each round is one eager localCheckpoint whose job also observes the
+    changed-row count; the loop stops when it reads 0.  It always stops
+    (a changed row takes a strictly smaller id of its component), after
+    at most n rounds.  No logarithmic bound is proven; 40- and 1000-doc
+    chains in ascending, min-at-far-end and shuffled id orders, and
+    chains and trees of 32-256 docs in hill-climbed adversarial orders
+    (``tools/ab_cc.py --search``), took at most log2(n) + 3 rounds.
     """
-    # drops self-loops and pairs with a null end; a repeated pair only
-    # repeats a row of the min aggregate, so pairs are not deduplicated
+    ids = docs.select(F.col(id_col).alias("src")).dropDuplicates()
+    # self-loops and pairs with a null end are dropped; a repeated pair
+    # only repeats a row of the min aggregate, so pairs are not deduped
     edges = (
         pairs.where(F.col("id_a") != F.col("id_b"))
         .select(
@@ -935,46 +939,48 @@ def duplicate_clusters(
                 )
             )
         )
+        .unionByName(ids.withColumn("dst", F.col("src")))
         .localCheckpoint()
     )
-    labels = (
-        docs.select(F.col(id_col).alias("id"))
-        .dropDuplicates(["id"])
-        .withColumn("comp", F.col("id"))
+    # a null id joins nothing: it skips the loop and keeps a null label
+    labels = edges.where(F.col("src") == F.col("dst")).select(
+        F.col("src").alias("id"), F.col("src").alias("comp")
     )
     while True:
-        own = labels.select(
-            "id", "comp", F.col("comp").alias("old"), F.lit(True).alias("own")
+        # both lookups (parent, then grandparent) filter and project the
+        # labels alike, so the second reuses the first one's exchange
+        ptr = labels.where(F.col("comp").isNotNull())
+        low = (
+            edges.join(ptr.select(F.col("id").alias("dst"), F.col("comp").alias("p")), "dst")
+            .join(ptr.select(F.col("id").alias("p"), F.col("comp").alias("gp")), "p")
+            .groupBy("src")
+            .agg(F.min("gp").alias("low"),
+                 F.max(F.when(F.col("src") == F.col("dst"), F.col("p"))).alias("old"))
+            .where(F.col("old").isNotNull())
         )
-        nbrs = edges.join(
-            labels.select(F.col("id").alias("dst"), F.col("comp").alias("nbr")), "dst"
-        ).select(
-            F.col("src").alias("id"), F.col("nbr").alias("comp"),
-            F.lit(None).alias("old"), F.lit(None).alias("own"),
-        )
-        hooked = (
-            own.unionByName(nbrs)
-            .groupBy("id")
-            .agg(F.min("comp").alias("comp"), F.max("old").alias("old"),
-                 F.max("own").alias("own"))
-            .where("own")
-        )
-        # same projection shape as the neighbour lookup: one exchange
-        ptr = labels.select(F.col("id").alias("comp"), F.col("comp").alias("jump"))
-        jumped, obs = observed(
-            hooked.join(ptr, "comp", "left").select(
-                "id", "old", F.least("comp", "jump").alias("comp")
-            ),
+        # each doc keeps its least label and offers it to its parent
+        hooked, obs = observed(
+            low.select(
+                F.inline(
+                    F.array(
+                        F.struct(F.col("src").alias("id"), "low", "old"),
+                        F.struct(F.col("old").alias("id"), "low",
+                                 F.when(F.lit(False), F.col("old")).alias("old")),
+                    )
+                )
+            ).groupBy("id").agg(F.min("low").alias("comp"), F.max("old").alias("old")),
             "duplicate_clusters_round",
             {"changed": F.count(F.when(F.col("comp") != F.col("old"), 1))},
         )
-        labels = jumped.select("id", "comp").localCheckpoint()
+        labels = hooked.select("id", "comp").localCheckpoint()
         if obs.get["changed"] == 0:
+            nulls = edges.where(F.col("src").isNull()).toDF("id", "comp")
             # the union may have widened ids to the pair type; every id
             # left is a docs id, so casting back is lossless
-            return labels.select(
-                F.col("id").cast(docs.schema[id_col].dataType).alias(id_col),
-                F.col("comp").alias("component"),
+            id_type = docs.schema[id_col].dataType
+            return labels.unionByName(nulls).select(
+                F.col("id").cast(id_type).alias(id_col),
+                F.col("comp").cast(id_type).alias("component"),
             )
 
 
